@@ -1,81 +1,43 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.metrics.source.CodegenMetrics
 
 /** Benchmark main: runs every SparkEntry query against
-  * SPARK_GRAFT_SF_DIR and prints one JSON line (driver contract).
+  * SPARK_GRAFT_SF_DIR and prints one JSON line (driver contract), then
+  * a short headline line (see [[render]]).
   * Results are materialized through the `noop` sink so the full plan —
   * not a count-only shortcut — is what's timed.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // SCALE-ADAPTIVE AQE advisory partition size (optimization guide
-    // §2.2/§2.5): the 64 MB default coalesces every post-shuffle stage
-    // of a small-byte input to 1-3 partitions, which serializes
-    // byte-small but CPU-heavy stages (md5 fan-outs, window walks) on
-    // a single core. Derive the target from input size over cluster
-    // parallelism — bytes/(cores·8) — clamped to [1 MB, 64 MB]: at
-    // fixture scale this floors at 1 MB (full parallelism for
-    // CPU-bound stages); at production scale the same formula hits
-    // the 64 MB ceiling, i.e. Spark's own default — never a constant
-    // tuned for either. Overridable via SPARK_GRAFT_ADVISORY_BYTES.
-    val inputBytes = Option(new java.io.File(sfDir).listFiles())
-      .map(_.filter(_.isFile).map(_.length).sum).getOrElse(0L)
-    val advisory = sys.env.get("SPARK_GRAFT_ADVISORY_BYTES")
-      .map(_.toLong)
-      .getOrElse(math.min(64L << 20,
-        math.max(1L << 20, inputBytes / (cpus.toLong * 8))))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        advisory.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.build(cpus, inputDir = Some(sfDir))
+    val selected = GraftSession.selectedQueries
+    // classes Janino compiled in this JVM: per-pass deltas show whether
+    // the warm-ups left the codegen cache warm for the timed runs
+    def compiled(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    def warm(dir: String, label: String): Int = selected.count {
+      case (name, fn) =>
+        try { fn(spark, dir).write.format("noop").mode("overwrite").save(); false }
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $label $name failed: ${e.getMessage}")
+          true
+        }
+    }
     // Steady-state warmup: run EVERY query once at the smallest scale
-    // factor before timing. Generated whole-stage code is cached by
-    // source text, so each query's (identical) codegen at the target SF
-    // hits the cache — without this, wide-aggregate shapes pay their
-    // one-time Janino compile inside the timed loop (q32: 20.5 s cold
-    // vs 6 s warm for identical data work). A long-lived cluster pays
-    // this once per session; steady-state is the comparable number.
-    // prefer the sf0.001 sibling of the target dir; fall back to the
-    // target itself (warmup on target data still warms the code paths,
-    // just slower). Failures are counted and reported, not silently
-    // swallowed — a fully-failed warmup means the timings below are
-    // cold-codegen numbers mislabeled as steady-state.
-    val sibling = new java.io.File(new java.io.File(sfDir).getParent,
-      "sf0.001")
-    val warmDir = if (sibling.isDirectory) sibling.getPath else sfDir
-    // SPARK_GRAFT_ONLY=q32_lsh_pairs,q65_quality_gate → bench only those
-    // (local profiling aid; driver runs without it = full suite).
-    // Unknown names fail loudly — a misspelling would otherwise bench
-    // zero queries and emit an empty-but-plausible results file.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(names) =>
-        val unknown = names -- SparkEntry.queries.keySet
-        require(unknown.isEmpty,
-          s"SPARK_GRAFT_ONLY names not in SparkEntry.queries: " +
-            unknown.mkString(", "))
-        SparkEntry.queries.filter(kv => names(kv._1))
-      case None => SparkEntry.queries
-    }
-    var warmFailures = 0
-    selected.foreach { case (name, fn) =>
-      try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        warmFailures += 1
-        System.err.println(s"[bench] warmup $name failed: ${e.getMessage}")
-      }
-    }
+    // factor before timing. Generated code is cached by source text, in
+    // a cache `GraftSession` sizes to hold the suite's working set, so
+    // each query's identical codegen at the target SF hits it — without
+    // this, wide-aggregate shapes pay their one-time Janino compile
+    // inside the timed loop (q32: 20.5 s cold vs 6 s warm for identical
+    // data work). A long-lived cluster pays this once per session;
+    // steady-state is the comparable number. A fully-failed warmup means
+    // the timings below are cold-codegen numbers mislabeled as
+    // steady-state, so failures are counted and reported.
+    val warmDir = GraftSession.warmDir(sfDir)
+    val c0 = compiled()
+    val warmFailures = warm(warmDir, "warmup")
     if (warmFailures > 0)
       System.err.println(s"[bench] $warmFailures warmup failures " +
         s"(dir=$warmDir) — timings may include cold codegen")
@@ -84,20 +46,16 @@ object Bench {
     // the driver's independent round-13 run showed q38 51.3 s / q36
     // 40.5 s in run 1 vs ~0.4–2 s in runs 2–3, landing several medians
     // on the polluted pair. One full untimed pass at the TARGET sf
-    // (shuffle files, page cache, JIT at real data volume — things the
-    // sf0.001 codegen warmup can't touch) before the timed loop makes
+    // (shuffle files, page cache, JIT at real data volume, and the
+    // classes whose code differs at the target size, e.g. a join
+    // strategy AQE only picks there) before the timed loop makes
     // median-of-3 robust. SPARK_GRAFT_SKIP_TARGET_WARMUP=1 disables it
     // (local single-query profiling where the extra pass just costs
     // time).
-    if (!sys.env.get("SPARK_GRAFT_SKIP_TARGET_WARMUP").contains("1")) {
-      selected.foreach { case (name, fn) =>
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
-          System.err.println(
-            s"[bench] target warmup $name failed: ${e.getMessage}")
-        }
-      }
-    }
+    val c1 = compiled()
+    if (!sys.env.get("SPARK_GRAFT_SKIP_TARGET_WARMUP").contains("1"))
+      warm(sfDir, "target warmup")
+    val warmCompiled = Seq(c1 - c0, compiled() - c1)
     // Noise protocol (round-3 verdict: single-run deltas on a shared box
     // are untrustworthy below ~3×): run the WHOLE suite `runs` times in
     // sequence — interleaved across queries, so a host-load spike taxes
@@ -105,7 +63,6 @@ object Bench {
     // report per-query MEDIANS. Raw per-run values go to a side file
     // the driver's tail-parse can't truncate.
     val runs = sys.env.get("SPARK_GRAFT_RUNS").map(_.toInt).getOrElse(3)
-    val names = selected.keys.toSeq
     val raw = scala.collection.mutable.Map[String, Vector[Double]]()
       .withDefaultValue(Vector.empty)
     // A run that throws records NO timing: an analysis error "completes"
@@ -113,7 +70,8 @@ object Bench {
     // that read as blazing-fast queries. Failed queries surface as
     // "err" in the output JSON (with the exception in `errors`) instead.
     val failed = scala.collection.mutable.Map[String, String]()
-    (1 to runs).foreach { r =>
+    val runCompiled = (1 to runs).map { r =>
+      val c = compiled()
       selected.foreach { case (name, fn) =>
         val t0 = System.nanoTime()
         try {
@@ -125,34 +83,51 @@ object Bench {
           System.err.println(s"[bench] $name (run $r) failed: ${e.getMessage}")
         }
       }
+      compiled() - c
     }
+    val (stdout, side) = render(selected.keys.toSeq, raw.toMap,
+      failed.toMap, sfDir, runs, warmCompiled, runCompiled, peakRssMb())
+    val sideFile = sys.env.getOrElse("SPARK_GRAFT_MEDIANS_FILE",
+      "BENCH_MEDIANS.json")
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(sideFile),
+      side + "\n")
+    println(stdout)
+    spark.stop()
+  }
+
+  /** The stdout record and the side-file record of a finished run.
+    *
+    * stdout is the per-query JSON line, then the headline
+    * `{"metric":"total","value":..,"unit":"sec","n_ok":..,"n_err":..}`:
+    * a reader that keeps only the output's last few thousand characters
+    * loses the long line's head, where its `total` sits, but keeps the
+    * short headline whole. `codegen` counts the classes compiled in the
+    * two warm-ups and in each timed run; a warm cache shows as timed-run
+    * counts near zero. */
+  def render(names: Seq[String], raw: Map[String, Vector[Double]],
+             failed: Map[String, String], sfDir: String, runs: Int,
+             warmCompiled: Seq[Long], runCompiled: Seq[Long],
+             peakRssMb: Double): (String, String) = {
     def median(xs: Vector[Double]): Double = {
       val s = xs.sorted
       if (s.isEmpty) 0.0
       else if (s.size % 2 == 1) s(s.size / 2)
       else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
     }
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    val runsOf = raw.withDefaultValue(Vector.empty[Double])
     // a query is clean only if EVERY run succeeded: a 1-of-3-success
     // query's "median" is a single arbitrary run (quite possibly the
     // noisiest) and must never seed a gate, so any failure — total or
     // partial — reports "err" in both outputs. Surviving raw runs stay
     // visible in the side file (with ok_runs) for diagnosis.
-    val ok = names.filter(n => raw(n).nonEmpty && !failed.contains(n))
-    val medians = ok.map(n => n -> median(raw(n)))
-    val qs = names.map { n =>
-      if (raw(n).nonEmpty && !failed.contains(n))
-        "\"" + n + "\":" + median(raw(n))
-      else "\"" + n + "\":\"err\""
-    }.mkString("{", ",", "}")
-    val total = medians.map(_._2).sum
+    val ok = names.filter(n => runsOf(n).nonEmpty && !failed.contains(n))
+    val med = ok.map(n => n -> median(runsOf(n))).toMap
+    val qs = names.map(n => "\"" + n + "\":" + med.getOrElse(n, "\"err\""))
+      .mkString("{", ",", "}")
+    val total = ok.map(med).sum
     val errJson = failed.toSeq.sortBy(_._1)
-      .map { case (k, v) => jstr(k) + ":" + jstr(v) }
+      .map { case (k, v) => GraftSession.jsonString(k) + ":" +
+        GraftSession.jsonString(v) }
       .mkString("{", ",", "}")
     // CONTENTION MARKER (round-14 verdict finding 1): a polluted run —
     // host load taxing run 1 of a freshly-started suite — shows up as a
@@ -163,24 +138,29 @@ object Bench {
     // gate ⇒ noise, not a regression) without hand-reading raw triples.
     // Read rule documented in BASELINE.md ("Reading BENCH_MEDIANS").
     val rawJson = names.map { n =>
-      val med =
-        if (raw(n).nonEmpty && !failed.contains(n)) median(raw(n)).toString
-        else "\"err\""
-      val mn = if (raw(n).nonEmpty) raw(n).min else 0.0
+      val xs = runsOf(n)
+      val mn = if (xs.nonEmpty) xs.min else 0.0
       val spread =
-        if (raw(n).nonEmpty && mn > 0) (raw(n).max / mn).toString
-        else "null"
-      "\"" + n + "\":{\"median\":" + med +
+        if (xs.nonEmpty && mn > 0) (xs.max / mn).toString else "null"
+      "\"" + n + "\":{\"median\":" + med.getOrElse(n, "\"err\"") +
         ",\"min\":" + mn +
         ",\"spread\":" + spread +
-        ",\"ok_runs\":" + raw(n).size +
-        ",\"runs\":[" + raw(n).mkString(",") + "]}"
+        ",\"ok_runs\":" + xs.size +
+        ",\"runs\":[" + xs.mkString(",") + "]}"
     }.mkString("{", ",", "}")
-    val sideFile = sys.env.getOrElse("SPARK_GRAFT_MEDIANS_FILE",
-      "/root/repo/BENCH_MEDIANS.json")
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(sideFile),
-      s"""{"sf":"$sfDir","runs":$runs,"errors":$errJson,"queries":$rawJson}""" + "\n")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","runs":$runs,"errors":$errJson}""")
-    spark.stop()
+    val extra = s""""codegen":{"warmup":[${warmCompiled.mkString(",")}],""" +
+      s""""runs":[${runCompiled.mkString(",")}]},"peak_rss_mb":$peakRssMb"""
+    val side = s"""{"sf":"$sfDir","runs":$runs,"errors":$errJson,$extra,"queries":$rawJson}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","runs":$runs,"errors":$errJson,$extra}"""
+    val headline = s"""{"metric":"total","value":$total,"unit":"sec",""" +
+      s""""n_ok":${ok.size},"n_err":${names.size - ok.size}}"""
+    (line + "\n" + headline, side)
   }
+
+  /** This JVM's resident-set high-water mark (`VmHWM`) in MB; 0 where
+    * /proc is absent. */
+  def peakRssMb(): Double = scala.util.Try(scala.util.Using.resource(
+      scala.io.Source.fromFile("/proc/self/status"))(_.getLines()
+      .collectFirst { case l if l.startsWith("VmHWM:") =>
+        l.split("\\s+")(1).toLong / 1024.0 }.get)).getOrElse(0.0)
 }

@@ -98,35 +98,16 @@ object BenchMl {
   private def d5(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.5f", Double.box(v))
 
-  /** JSON string escape for interpolated label names — a label
-    * carrying a quote/backslash/control char must not break the one
-    * JSON line (round-13 review: same failure class as the locale
-    * pin). */
-  private def jstr(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-
   def main(args: Array[String]): Unit = {
     val rows = sys.env.getOrElse("SPARK_GRAFT_ML_ROWS", "1050000").toLong
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val algos = sys.env.getOrElse("SPARK_GRAFT_ML_ALGOS", "DT,NB,RF,MLP")
       .split(",").map(_.trim).filter(_.nonEmpty)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(cpus)
     import graft.ops.{CleanOps, SplitOps}
 
     val featureCols = (0 until 78).map(i => s"f$i")
-    val flows = spark.read.parquet(fixture(spark, rows, cpus.toInt))
+    val flows = spark.read.parquet(fixture(spark, rows, cpus))
 
     // ---- clean + split (runEndToEnd steps 1-3, untimed by the
     // reference's cells but reported here for completeness). Unlike
@@ -241,7 +222,8 @@ object BenchMl {
     }
     val algoJson = results.map { case (n, s, a, pl) =>
       val labelsJson = pl.map { case (l, n2, p, r) =>
-        s""""$l":{"label":"${jstr(n2)}","precision":${d5(p)},""" +
+        s""""$l":{"label":${GraftSession.jsonString(n2)},""" +
+          s""""precision":${d5(p)},""" +
           s""""recall":${d5(r)}}"""
       }.mkString(",")
       s""""$n":{"sec":${d3(s)},"accuracy":${d5(a)},""" +

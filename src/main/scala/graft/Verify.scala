@@ -1,34 +1,17 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. Runs under
+  * the benched session config (AQE with the advisory clamp derived from
+  * `sfDir`), so the answers checked are the answers of the config that
+  * gets timed. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.build(cpus, inputDir = Some(sfDir))
     new java.io.File(outDir).mkdirs()
-    // SPARK_GRAFT_ONLY=q12_...,q13_... → dump only those (local
-    // iteration aid; the driver runs without it = full suite). Unknown
-    // names fail loudly — a silent empty filter looks like success.
-    val selected = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet) match {
-      case Some(names) =>
-        val unknown = names -- SparkEntry.queries.keySet
-        require(unknown.isEmpty,
-          s"SPARK_GRAFT_ONLY names not in SparkEntry.queries: " +
-            unknown.mkString(", "))
-        SparkEntry.queries.filter(kv => names(kv._1))
-      case None => SparkEntry.queries
-    }
+    val selected = GraftSession.selectedQueries
     // A thrown query must stay visible: besides stderr, every failure
     // lands in _errors.json next to oracle_sql.json. Round 7 shipped a
     // green-looking gate over 21 broken queries because a failure here
@@ -43,18 +26,7 @@ object Verify {
         System.err.println(s"[verify] $name failed: $msg")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    def q(s: String): String = GraftSession.jsonString(s)
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

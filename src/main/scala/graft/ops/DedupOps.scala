@@ -334,12 +334,18 @@ object DedupOps {
     // before its exchange), so nothing reuses across them — without a
     // lineage cut the caller's whole upstream (MinHash signatures,
     // winnow windows, phash bands) runs twice. Checkpoint the
-    // projected two-column rows once (lazy: first action pays) — the
-    // q124/q141 multi-consumer convention; measured 2× on q265's
-    // fingerprint subtree.
+    // projected two-column rows once — the q124/q141 multi-consumer
+    // convention; measured 2× on q265's fingerprint subtree. EAGER, as
+    // at every multi-consumer cut in this file: a lazy cut is marked
+    // checkpointed by whichever consumer's job finishes first, and when
+    // AQE runs a broadcast of one consumer next to the other's shuffle
+    // stage, that marking (broadcast thread: checkpoint lock, then RDD
+    // lock) and the DAG scheduler's stage walk (RDD lock, then
+    // checkpoint lock) deadlock the JVM — q32 hung Verify that way
+    // under the bench config (sf0.001, local[4], 1 MB advisory).
     val withK = members
       .select(struct(bucketCols.map(col): _*).as("_bk"), col(idCol))
-      .localCheckpoint(false)
+      .localCheckpoint()
     val summary = withK.groupBy(col("_bk"))
       .agg(count(lit(1)).as("_m"), min(col(idCol)).as("_min"))
       .filter(col("_m") > 1)
@@ -375,11 +381,12 @@ object DedupOps {
                              ngram: Int = 1): DataFrame = {
     // band rows are referenced twice (bucket minima + the join back);
     // without cutting lineage the whole MinHash signature subtree runs
-    // twice — checkpoint materializes it once (lazy: first action pays)
+    // twice — checkpoint materializes it once (eager: see
+    // cappedPairsFromMembers for the deadlock a lazy cut risks)
     val bandsDf = lshBandsFromArray(
         minhashSignatureArr(df, idCol, textCol, k, ngram = ngram),
         idCol, "sig", k, bands)
-      .localCheckpoint(false)
+      .localCheckpoint()
     val reps = bandsDf.groupBy(col("band"), col("band_hash"))
       .agg(min(col(idCol)).as("id_a"))
     bandsDf.join(reps, Seq("band", "band_hash"))
@@ -456,8 +463,9 @@ object DedupOps {
     val w = bits / chunks
     // the fingerprint frame is referenced three times (banding + both
     // sides of the verify join-back); materialize its (possibly
-    // whole-corpus-aggregate) lineage once
-    val fp = fp0.localCheckpoint(false)
+    // whole-corpus-aggregate) lineage once (eager: see
+    // cappedPairsFromMembers)
+    val fp = fp0.localCheckpoint()
     val chunkCols = (0 until chunks).map { i =>
       struct(lit(i).as("ci"),
         shiftrightunsigned(col(fpCol), i * w)
@@ -586,8 +594,9 @@ object DedupOps {
                     candidates0: DataFrame, ngram: Int = 1): DataFrame = {
     // the candidate list is referenced twice (intersection counts + the
     // join-back that surfaces zero-overlap pairs); materialize it once
-    // rather than recompute its (possibly LSH-sized) lineage
-    val candidates = candidates0.localCheckpoint(false)
+    // rather than recompute its (possibly LSH-sized) lineage (eager:
+    // see cappedPairsFromMembers)
+    val candidates = candidates0.localCheckpoint()
     val unit =
       if (ngram <= 1) TextOps.tokenSet(col(textCol))
       else TextOps.shingleSet(col(textCol), ngram)

@@ -912,19 +912,35 @@ object StreamOps {
   /** Keyed parquet UPSERT sink for [[sinkStream]]/[[scoreStream]]: per
     * micro-batch, rows already in the table whose key appears in the
     * batch are REPLACED (digest-free anti-join on the key + union +
-    * atomic directory swap) — the portable MERGE idiom behind the
+    * directory swap) — the portable MERGE idiom behind the
     * reference's prepared-statement Cassandra writes (a Cassandra INSERT
     * is an upsert per primary key). A production deployment points the
     * same per-batch shape at an ACID table format (Delta/Iceberg MERGE)
     * or a key-value store; plain parquet needs the tmp-dir swap because
     * a table can't be read and overwritten in one job. The anti-join
     * broadcasts the batch's (small) key set, so the merge cost is one
-    * scan of the live table per batch. */
+    * scan of the live table per batch.
+    *
+    * CRASH SAFETY: the merge is written to `<path>_tmp` (its commit
+    * writes `_SUCCESS` last), then swapped in by two atomic renames,
+    * `path → <path>_old` and `<path>_tmp → path`, before `<path>_old`
+    * is deleted, so one complete table always exists. Each call first
+    * recovers from a crash: with no table at `path`, a committed
+    * `<path>_tmp` is moved in, else `<path>_old` is moved back (the
+    * interrupted batch lost, as if never delivered). */
   def keyedParquetUpsert(spark: SparkSession, path: String,
                          keyCol: String): (DataFrame, Long) => Unit = {
     (batch, _) =>
       import java.nio.file.{Files, Paths}
       val target = Paths.get(path)
+      val tmp = Paths.get(path + "_tmp")
+      val old = Paths.get(path + "_old")
+      if (!Files.exists(target)) {
+        if (Files.exists(tmp.resolve("_SUCCESS"))) Files.move(tmp, target)
+        else if (Files.exists(old)) Files.move(old, target)
+      }
+      graft.Fs.deleteRecursively(old)
+      graft.Fs.deleteRecursively(tmp)
       val merged =
         if (Files.exists(target))
           spark.read.parquet(path)
@@ -932,17 +948,16 @@ object StreamOps {
               Seq(keyCol), "left_anti")
             .unionByName(batch)
         else batch
-      val tmp = path + "_tmp"
-      merged.write.mode("overwrite").parquet(tmp)
-      // swap: drop the old table, move the new one in
-      def rm(p: java.nio.file.Path): Unit = {
-        if (Files.isDirectory(p))
-          graft.Fs.listDir(p)(_.forEach(rm(_)))
-        Files.deleteIfExists(p)
-      }
-      rm(target)
-      Files.move(Paths.get(tmp), target)
+      merged.write.mode("overwrite").parquet(tmp.toString)
+      if (Files.exists(target)) Files.move(target, old)
+      Files.move(tmp, target)
+      graft.Fs.deleteRecursively(old)
   }
+
+  /** Delete a [[keyedParquetUpsert]] table together with its swap
+    * leftovers, which the sink's recovery would otherwise move back. */
+  def dropUpsertTable(path: String): Unit = Seq("", "_tmp", "_old")
+    .foreach(s => graft.Fs.deleteRecursively(java.nio.file.Paths.get(path + s)))
 
   /** Run a streaming aggregation over a static directory to completion
     * (AvailableNow + memory sink) and return the final result as a

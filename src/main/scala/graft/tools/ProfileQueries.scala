@@ -4,11 +4,10 @@
 // bytes, and task counts — the "where is the time actually going"
 // readout the bench's single wall number can't give.
 //
-// Run: SPARK_GRAFT_SF_DIR=... tools/run_profile.sh q253_curation_e2e ...
+// Run: SPARK_GRAFT_SF_DIR=... sbt "runMain graft.tools.ProfileQueries q253_curation_e2e ..."
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable
 
@@ -16,16 +15,9 @@ object ProfileQueries {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.GraftSession.build(cpus, inputDir = Some(sfDir),
+      logLevel = "ERROR")
     require(args.nonEmpty, "usage: ProfileQueries <query> [query ...]")
     val unknown = args.toSet -- graft.SparkEntry.queries.keySet
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
@@ -63,19 +55,11 @@ object ProfileQueries {
       }
     }
 
-    // codegen warmup at sf0.001 (the bench convention)
-    val sibling = new java.io.File(
-      new java.io.File(sfDir).getParent, "sf0.001")
-    val warmDir = if (sibling.isDirectory) sibling.getPath else sfDir
-    args.foreach { name =>
-      graft.SparkEntry.queries(name)(spark, warmDir)
+    // the bench's warm-ups: codegen at sf0.001, then one untimed
+    // target-SF pass (page cache / JIT)
+    for (d <- Seq(graft.GraftSession.warmDir(sfDir), sfDir); name <- args)
+      graft.SparkEntry.queries(name)(spark, d)
         .write.format("noop").mode("overwrite").save()
-    }
-    // one untimed target-SF pass (page cache / JIT)
-    args.foreach { name =>
-      graft.SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-    }
 
     spark.sparkContext.addSparkListener(listener)
     args.foreach { name =>

@@ -36,7 +36,7 @@ object FuseReplaceInf extends Rule[LogicalPlan] {
   * `spark.sql("SELECT replace_inf(x, -100.0) ...")` works next to the
   * Column API.
   *
-  * Usage: `SparkSession.builder().withExtensions(new GraftExtensions)`
+  * Usage: `withExtensions(new GraftExtensions)` on a session builder
   * or `spark.sql.extensions=org.apache.spark.sql.graft.GraftExtensions`.
   * For an already-running session, [[GraftExtensions.register]] installs
   * the same pieces imperatively.

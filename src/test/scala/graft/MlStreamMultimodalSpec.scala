@@ -107,13 +107,7 @@ class MlStreamMultimodalSpec extends AnyFunSuite {
   test("keyedParquetUpsert: batch 2 replaces overlapping keys, keeps " +
        "disjoint ones (MERGE, not append)") {
     val path = "/root/repo/target/test_keyed_upsert"
-    def rm(p: java.nio.file.Path): Unit = {
-      if (java.nio.file.Files.isDirectory(p))
-        java.nio.file.Files.list(p).forEach(rm(_))
-      java.nio.file.Files.deleteIfExists(p)
-    }
-    rm(java.nio.file.Paths.get(path))
-    rm(java.nio.file.Paths.get(path + "_tmp"))
+    StreamOps.dropUpsertTable(path)
     val sink = StreamOps.keyedParquetUpsert(spark, path, "k")
     sink(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), 0L)
     sink(Seq((2L, "B"), (3L, "c")).toDF("k", "v"), 1L)

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryProgress, Trigger}
@@ -19,32 +17,11 @@ import graft.streaming.StreamOps
   * TakeOrderedAndProject (per-partition top-k heaps), never a global
   * sort. */
 class SketchStreamStateSpec extends AnyFunSuite {
+  import SparkTestSession.{stageBatches, tmpDir}
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
-  private def tmpDir(tag: String) = Files.createTempDirectory(
-    Paths.get("/root/repo/target"), tag)
-
   private def ts(ms: Long) = new java.sql.Timestamp(ms)
-
-  private def stageBatches(tag: String, batches: Seq[DataFrame]): String = {
-    val dir = tmpDir(tag)
-    batches.zipWithIndex.foreach { case (b, i) =>
-      val tmp = s"$dir/_tmp$i"
-      b.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = Fs.listDir(Paths.get(tmp))(
-        _.filter(p => p.getFileName.toString.startsWith("part-"))
-          .findFirst().get())
-      val dest = Paths.get(s"$dir/batch$i.parquet")
-      Files.move(part, dest, StandardCopyOption.REPLACE_EXISTING)
-      Files.setLastModifiedTime(dest,
-        java.nio.file.attribute.FileTime
-          .fromMillis(1000000000000L + i * 600000L))
-      Fs.listDir(Paths.get(tmp))(_.forEach(Files.deleteIfExists(_)))
-      Files.deleteIfExists(Paths.get(tmp))
-    }
-    dir.toString
-  }
 
   private def runWithProgress(agg: DataFrame, name: String,
                               outputMode: String,

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryProgress, Trigger}
@@ -19,34 +17,11 @@ import graft.streaming.StreamOps
   * event volume ingested.
   */
 class StateBoundSpec extends AnyFunSuite {
+  import SparkTestSession.{stageBatches, tmpDir}
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
-  private def tmpDir(tag: String) = Files.createTempDirectory(
-    Paths.get("/root/repo/target"), tag)
-
   private def ts(ms: Long) = new java.sql.Timestamp(ms)
-
-  /** Stage per-batch single-file parquets with increasing modtimes so
-    * maxFilesPerTrigger=1 replays them in order (q275's staging). */
-  private def stageBatches(tag: String, batches: Seq[DataFrame]): String = {
-    val dir = tmpDir(tag)
-    batches.zipWithIndex.foreach { case (b, i) =>
-      val tmp = s"$dir/_tmp$i"
-      b.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = Fs.listDir(Paths.get(tmp))(
-        _.filter(p => p.getFileName.toString.startsWith("part-"))
-          .findFirst().get())
-      val dest = Paths.get(s"$dir/batch$i.parquet")
-      Files.move(part, dest, StandardCopyOption.REPLACE_EXISTING)
-      Files.setLastModifiedTime(dest,
-        java.nio.file.attribute.FileTime
-          .fromMillis(1000000000000L + i * 600000L))
-      Fs.listDir(Paths.get(tmp))(_.forEach(Files.deleteIfExists(_)))
-      Files.deleteIfExists(Paths.get(tmp))
-    }
-    dir.toString
-  }
 
   /** Drive an event-time query to completion under AvailableNow and
     * return (sink table, per-batch progress records). */
