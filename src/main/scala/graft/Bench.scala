@@ -2,6 +2,9 @@ package graft
 
 import org.apache.spark.metrics.source.CodegenMetrics
 
+import graft.ops.FitArtifacts
+import graft.ops.FitArtifacts.FitStats
+
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line (driver contract), then
   * a short headline line (see [[render]]).
@@ -17,6 +20,16 @@ object Bench {
     // classes Janino compiled in this JVM: per-pass deltas show whether
     // the warm-ups left the codegen cache warm for the timed runs
     def compiled(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    // the fit memo's counters per pass: a fit misses once per dir, in a
+    // warm-up, and every timed run replays it
+    val passFits = scala.collection.mutable.ArrayBuffer[Map[String, FitStats]]()
+    var lastFits = Map.empty[String, FitStats]
+    def endPass(): Unit = {
+      val now = FitArtifacts.stats
+      passFits += now.map { case (n, f) =>
+        n -> (f - lastFits.getOrElse(n, FitStats(0, 0, 0))) }
+      lastFits = now
+    }
     def warm(dir: String, label: String): Int = selected.count {
       case (name, fn) =>
         try { fn(spark, dir).write.format("noop").mode("overwrite").save(); false }
@@ -53,9 +66,11 @@ object Bench {
     // (local single-query profiling where the extra pass just costs
     // time).
     val c1 = compiled()
+    endPass()
     if (!sys.env.get("SPARK_GRAFT_SKIP_TARGET_WARMUP").contains("1"))
       warm(sfDir, "target warmup")
     val warmCompiled = Seq(c1 - c0, compiled() - c1)
+    endPass()
     // Noise protocol (round-3 verdict: single-run deltas on a shared box
     // are untrustworthy below ~3×): run the WHOLE suite `runs` times in
     // sequence — interleaved across queries, so a host-load spike taxes
@@ -70,9 +85,13 @@ object Bench {
     // that read as blazing-fast queries. Failed queries surface as
     // "err" in the output JSON (with the exception in `errors`) instead.
     val failed = scala.collection.mutable.Map[String, String]()
+    // classes each query compiled, summed over the timed runs
+    val queryCompiled = scala.collection.mutable.Map[String, Long]()
+      .withDefaultValue(0L)
     val runCompiled = (1 to runs).map { r =>
       val c = compiled()
       selected.foreach { case (name, fn) =>
+        val cq = compiled()
         val t0 = System.nanoTime()
         try {
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
@@ -82,11 +101,14 @@ object Bench {
             .linesIterator.take(2).mkString(" | ")
           System.err.println(s"[bench] $name (run $r) failed: ${e.getMessage}")
         }
+        queryCompiled(name) += compiled() - cq
       }
+      endPass()
       compiled() - c
     }
     val (stdout, side) = render(selected.keys.toSeq, raw.toMap,
-      failed.toMap, sfDir, runs, warmCompiled, runCompiled, peakRssMb())
+      failed.toMap, sfDir, runs, warmCompiled, runCompiled, peakRssMb(),
+      passFits.toSeq, queryCompiled.toMap)
     val sideFile = sys.env.getOrElse("SPARK_GRAFT_MEDIANS_FILE",
       "BENCH_MEDIANS.json")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(sideFile),
@@ -103,11 +125,16 @@ object Bench {
     * loses the long line's head, where its `total` sits, but keeps the
     * short headline whole. `codegen` counts the classes compiled in the
     * two warm-ups and in each timed run; a warm cache shows as timed-run
-    * counts near zero. */
+    * counts near zero. The side file adds each query's compiled classes
+    * over the timed runs (`queryCompiled`), and `fits`: per
+    * [[FitArtifacts.memo]] name, its hits, misses and fit ms in each
+    * pass, the two warm-ups first. A fit's cold cost is its `fit_ms` in
+    * the target-sf warm-up; the timed medians are fit-amortized. */
   def render(names: Seq[String], raw: Map[String, Vector[Double]],
              failed: Map[String, String], sfDir: String, runs: Int,
              warmCompiled: Seq[Long], runCompiled: Seq[Long],
-             peakRssMb: Double): (String, String) = {
+             peakRssMb: Double, fits: Seq[Map[String, FitStats]],
+             queryCompiled: Map[String, Long]): (String, String) = {
     def median(xs: Vector[Double]): Double = {
       val s = xs.sorted
       if (s.isEmpty) 0.0
@@ -146,11 +173,20 @@ object Bench {
         ",\"min\":" + mn +
         ",\"spread\":" + spread +
         ",\"ok_runs\":" + xs.size +
+        ",\"codegen\":" + queryCompiled.getOrElse(n, 0L) +
         ",\"runs\":[" + xs.mkString(",") + "]}"
+    }.mkString("{", ",", "}")
+    val fitsJson = fits.flatMap(_.keys).distinct.sorted.map { n =>
+      val per = fits.map(_.getOrElse(n, FitStats(0, 0, 0)))
+      GraftSession.jsonString(n) +
+        ":{\"hits\":[" + per.map(_.hits).mkString(",") +
+        "],\"misses\":[" + per.map(_.misses).mkString(",") +
+        "],\"fit_ms\":[" + per.map(f => math.round(f.fitMs)).mkString(",") +
+        "]}"
     }.mkString("{", ",", "}")
     val extra = s""""codegen":{"warmup":[${warmCompiled.mkString(",")}],""" +
       s""""runs":[${runCompiled.mkString(",")}]},"peak_rss_mb":$peakRssMb"""
-    val side = s"""{"sf":"$sfDir","runs":$runs,"errors":$errJson,$extra,"queries":$rawJson}"""
+    val side = s"""{"sf":"$sfDir","runs":$runs,"errors":$errJson,$extra,"fits":$fitsJson,"queries":$rawJson}"""
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","runs":$runs,"errors":$errJson,$extra}"""
     val headline = s"""{"metric":"total","value":$total,"unit":"sec",""" +
       s""""n_ok":${ok.size},"n_err":${names.size - ok.size}}"""

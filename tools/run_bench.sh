@@ -6,7 +6,14 @@
 # `sbt "export Runtime/fullClasspath"` cached in /tmp/graft_cp.txt.
 #
 # Usage: tools/run_bench.sh <medians_file> [extra env via environment]
+# The side file goes to <medians_file>, never the committed
+# BENCH_MEDIANS.json.
 set -eu
+if [ $# -lt 1 ] || [ -z "$1" ]; then
+  echo "usage: tools/run_bench.sh <medians_file> [extra env via environment]" >&2
+  exit 2
+fi
+export SPARK_GRAFT_MEDIANS_FILE="$1"
 CP_FILE=${GRAFT_CP_FILE:-/tmp/graft_cp.txt}
 if [ ! -s "$CP_FILE" ]; then
   sbt -batch "export Runtime/fullClasspath" 2>/dev/null \
