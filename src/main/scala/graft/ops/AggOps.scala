@@ -1848,15 +1848,8 @@ object AggOps {
       col("s13").as("a13"),
       (col("s22") + lit(lambda)).as("a22"), col("s23").as("a23"),
       (col("s33") + lit(lambda)).as("a33")): _*)
-    // Cramer determinants — spelled ONCE here and identically in the
-    // oracle (3×3 cofactor expansion along the first row); symmetric
-    // A, so a21 = a12 etc.
-    def det(m11: Column, m12: Column, m13: Column,
-            m21: Column, m22: Column, m23: Column,
-            m31: Column, m32: Column, m33: Column): Column =
-      m11 * (m22 * m33 - m23 * m32) -
-        m12 * (m21 * m33 - m23 * m31) +
-        m13 * (m21 * m32 - m22 * m31)
+    // Cramer determinants ([[LinAlg.det]]); symmetric A, so a21 = a12
+    import LinAlg.det
     def d(c: String): Column = col(c).cast("double")
     val dA = det(d("a11"), d("a12"), d("a13"),
       d("a12"), d("a22"), d("a23"), d("a13"), d("a23"), d("a33"))

@@ -1811,7 +1811,8 @@ object EvalOps {
     * extended to exp; saturation is deterministic: e^{+∞} → μ = 10⁹,
     * e^{−∞} → μ = 0), and the IRLS weight w = μ(1−μ) fixes to micro
     * by EXACT integer division (μ(10⁹−μ) ≤ 2.5·10¹⁷ stays in long,
-    * operands non-negative so div = floor on both engines). */
+    * operands non-negative so div = floor on both engines); the
+    * score term is the exact nano residual y·10⁹ − μ. */
   private def logisticMuFrame(base: DataFrame,
                               beta: DataFrame): DataFrame =
     base.crossJoin(broadcast(beta))
@@ -1821,6 +1822,7 @@ object EvalOps {
         exp(-(col("_zm").cast("double") / lit(1e6))))).cast("long"))
       .withColumn("_w",
         expr("(_mu * (1000000000L - _mu)) div 1000000000000L"))
+      .withColumn("_sc", col("_y") * lit(1000000000L) - col("_mu"))
 
   /** EXACT LEVEL COLLAPSE for the iterative GLM fits (the
     * aggregate-before-you-iterate move — optimization guide §2.3/2.4
@@ -1852,59 +1854,104 @@ object EvalOps {
     * A degenerate step (dA = 0, e.g. empty input) keeps β unchanged
     * rather than erroring. */
   private def logisticNewton(base: DataFrame, iters: Int): DataFrame =
-    newtonLoop(base, iters, logisticMuFrame,
-      base.sparkSession.createDataFrame(Seq(Tuple3(0L, 0L, 0L)))
-        .toDF("b0_micro", "b1_micro", "b2_micro"))
+    newtonLoop(base, iters, logisticMuFrame, zeroBeta(base, Seq("")))
 
-  /** The GLM IRLS/Newton loop shared by [[logisticNewton]] and
-    * [[poissonNewton]]: the link only decides the per-row (_mu, _w)
-    * projection and the β seed; the weighted 3×3 Gram + nano score
-    * aggregate and the Cramer solve are link-free. */
+  /** The 1-row all-zero β⁰ frame (b0_micro<k>, b1_micro<k>,
+    * b2_micro<k> per fit suffix k) — the logistic-family seed, which
+    * makes step 1 fully exact (μ ≡ ½). */
+  private def zeroBeta(base: DataFrame, fits: Seq[String]): DataFrame =
+    base.sparkSession.createDataFrame(Seq(Tuple1(0L))).toDF("_zero")
+      .select(fits.flatMap(k =>
+        (0 to 2).map(j => lit(0L).as(s"b${j}_micro$k"))): _*)
+
+  /** The null-model seed of the log-link count fits (Poisson, NB2,
+    * Gamma): β₀ = ln((Σy+1)/n). Newton from 0 overshoots
+    * catastrophically on large counts (Δβ₀ ≈ ȳ−1); the standard null
+    * init puts step 1 in the quadratic zone. The +1 keeps the ln
+    * argument positive; empty input seeds 0. */
+  private def nullSeed(base: DataFrame): DataFrame =
+    base.agg(sum(col("_c")).as("_n"),
+        sum(col("_c") * col("_y")).as("_sy"))
+      .select(
+        when(col("_n") > 0, round(log(
+          (col("_sy") + 1).cast("double") / col("_n").cast("double"))
+          * 1e6, 0).cast("long")).otherwise(0L).as("b0_micro"),
+        lit(0L).as("b1_micro"), lit(0L).as("b2_micro"))
+      .localCheckpoint()
+
+  /** The 3×3 weighted Gram XᵀWX of fit `k`: the six sums a00..a22
+    * (suffixed k) of _c·_w<k>·x_r·x_c over the per-row level count
+    * `_c` and micro weight `_w<k>`. */
+  private def gramSums(k: String): Seq[Column] = {
+    val cw = col("_c") * col(s"_w$k")
+    Seq(sum(cw).as(s"a00$k"), sum(cw * col("_x1")).as(s"a01$k"),
+      sum(cw * col("_x2")).as(s"a02$k"),
+      sum(cw * col("_x1") * col("_x1")).as(s"a11$k"),
+      sum(cw * col("_x1") * col("_x2")).as(s"a12$k"),
+      sum(cw * col("_x2") * col("_x2")).as(s"a22$k"))
+  }
+
+  /** The score Xᵀs of fit `k`: s0..s2 (suffixed k), the sums of
+    * _c·_sc<k>·x_r over the per-row score term `_sc<k>`. */
+  private def scoreSums(k: String): Seq[Column] = {
+    val cs = col("_c") * col(s"_sc$k")
+    Seq(sum(cs).as(s"s0$k"), sum(cs * col("_x1")).as(s"s1$k"),
+      sum(cs * col("_x2")).as(s"s2$k"))
+  }
+
+  /** ONE Cramer Newton update of fit `k`'s micro β triple
+    * (b0_micro<k>, b1_micro<k>, b2_micro<k>) from the a00..a22 Gram
+    * and s0..s2 score columns (suffixed k): β_j += round(scale·d_j/dA)
+    * — `scale` is 10³ for the IRLS fits (micro weight, nano score)
+    * and 1 for Gamma's unit-weight information. A degenerate step
+    * (dA = 0, e.g. empty input) keeps β unchanged rather than
+    * erroring. The same q305 solve as [[cramerRidgeSolve3]] and the
+    * oracle's `cramer3Sql`. */
+  private def cramerStep(k: String, scale: Double): Seq[Column] = {
+    import LinAlg.det
+    def d(c: String): Column = col(c + k).cast("double")
+    val dA = det(d("a00"), d("a01"), d("a02"),
+      d("a01"), d("a11"), d("a12"), d("a02"), d("a12"), d("a22"))
+    val ds = Seq(
+      det(d("s0"), d("a01"), d("a02"),
+        d("s1"), d("a11"), d("a12"), d("s2"), d("a12"), d("a22")),
+      det(d("a00"), d("s0"), d("a02"),
+        d("a01"), d("s1"), d("a12"), d("a02"), d("s2"), d("a22")),
+      det(d("a00"), d("a01"), d("s0"),
+        d("a01"), d("a11"), d("s1"), d("a02"), d("a12"), d("s2")))
+    ds.zipWithIndex.map { case (dj, j) =>
+      val b = col(s"b${j}_micro$k")
+      when(dA =!= 0.0, b + round(lit(scale) * dj / dA).cast("long"))
+        .otherwise(b).as(s"b${j}_micro$k")
+    }
+  }
+
+  /** The fixed-iteration GLM Newton loop behind every 3-coefficient
+    * fit — logistic, Poisson, NB2, Gamma, and the fused K-class
+    * one-vs-rest and softmax fits: the link only decides `muFrame`,
+    * the per-row projection of each fit k's micro weight `_w<k>` and
+    * score term `_sc<k>` from the current β frame, and the seed.
+    * Each step is ONE map-side-combinable aggregate of every fit's
+    * [[gramSums]] + [[scoreSums]] (or of the score sums alone, crossed
+    * with a β-free `info` Gram), the [[cramerStep]] projection per
+    * fit, and one localCheckpoint of the 1-row β frame. The Δβ scale
+    * follows from the Gram's units: a micro-weight Gram against a
+    * nano score gives micro β at 10³·d/dA, a unit-weight `info` Gram
+    * against a micro score at d/dA. */
   private def newtonLoop(base: DataFrame, iters: Int,
                          muFrame: (DataFrame, DataFrame) => DataFrame,
-                         beta0: DataFrame): DataFrame = {
+                         beta0: DataFrame, fits: Seq[String] = Seq(""),
+                         info: Option[DataFrame] = None): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
+    val scale = if (info.isEmpty) 1e3 else 1.0
     var beta = beta0
-    def det(m11: Column, m12: Column, m13: Column,
-            m21: Column, m22: Column, m23: Column,
-            m31: Column, m32: Column, m33: Column): Column =
-      m11 * (m22 * m33 - m23 * m32) -
-        m12 * (m21 * m33 - m23 * m31) +
-        m13 * (m21 * m32 - m22 * m31)
     for (_ <- 1 to iters) {
-      val a = muFrame(base, beta).agg(
-        sum(col("_c") * col("_w")).as("a00"),
-        sum(col("_c") * col("_w") * col("_x1")).as("a01"),
-        sum(col("_c") * col("_w") * col("_x2")).as("a02"),
-        sum(col("_c") * col("_w") * col("_x1") * col("_x1")).as("a11"),
-        sum(col("_c") * col("_w") * col("_x1") * col("_x2")).as("a12"),
-        sum(col("_c") * col("_w") * col("_x2") * col("_x2")).as("a22"),
-        sum(col("_c") * (col("_y") * lit(1000000000L) - col("_mu")))
-          .as("s0"),
-        sum(col("_c") * (col("_y") * lit(1000000000L) - col("_mu")) *
-          col("_x1")).as("s1"),
-        sum(col("_c") * (col("_y") * lit(1000000000L) - col("_mu")) *
-          col("_x2")).as("s2"))
-      def d(c: String): Column = col(c).cast("double")
-      val dA = det(d("a00"), d("a01"), d("a02"),
-        d("a01"), d("a11"), d("a12"), d("a02"), d("a12"), d("a22"))
-      val d0 = det(d("s0"), d("a01"), d("a02"),
-        d("s1"), d("a11"), d("a12"), d("s2"), d("a12"), d("a22"))
-      val d1 = det(d("a00"), d("s0"), d("a02"),
-        d("a01"), d("s1"), d("a12"), d("a02"), d("s2"), d("a22"))
-      val d2 = det(d("a00"), d("a01"), d("s0"),
-        d("a01"), d("a11"), d("s1"), d("a02"), d("a12"), d("s2"))
-      beta = a.crossJoin(broadcast(beta))
-        .select(
-          when(dA =!= 0.0, col("b0_micro") +
-            round(lit(1e3) * d0 / dA).cast("long"))
-            .otherwise(col("b0_micro")).as("b0_micro"),
-          when(dA =!= 0.0, col("b1_micro") +
-            round(lit(1e3) * d1 / dA).cast("long"))
-            .otherwise(col("b1_micro")).as("b1_micro"),
-          when(dA =!= 0.0, col("b2_micro") +
-            round(lit(1e3) * d2 / dA).cast("long"))
-            .otherwise(col("b2_micro")).as("b2_micro"))
+      val sums = fits.flatMap(k =>
+        (if (info.isEmpty) gramSums(k) else Nil) ++ scoreSums(k))
+      val agg = muFrame(base, beta).agg(sums.head, sums.tail: _*)
+      beta = info.fold(agg)(i => agg.crossJoin(broadcast(i)))
+        .crossJoin(broadcast(beta))
+        .select(fits.flatMap(cramerStep(_, scale)): _*)
         .localCheckpoint()
     }
     beta
@@ -1957,7 +2004,8 @@ object EvalOps {
     * division, and the Gram products inside long for grid-scale
     * features; callers with cell rates beyond e¹³ rescale first);
     * μ = e^z fixes to integer nano per row, and the log-link IRLS
-    * weight IS μ — micro by exact non-negative integer division. */
+    * weight IS μ — micro by exact non-negative integer division; the
+    * score term is the exact nano residual y·10⁹ − μ. */
   private def poissonMuFrame(base: DataFrame,
                              beta: DataFrame): DataFrame =
     base.crossJoin(broadcast(beta))
@@ -1968,21 +2016,43 @@ object EvalOps {
         round(exp(col("_zm").cast("double") / lit(1e6)) * lit(1e9))
           .cast("long"))
       .withColumn("_w", expr("_mu div 1000"))
+      .withColumn("_sc", col("_y") * lit(1000000000L) - col("_mu"))
 
   private def poissonNewton(base: DataFrame, iters: Int): DataFrame =
-    // null-model seed β₀ = ln((Σy+1)/n): Poisson Newton from 0
-    // overshoots catastrophically on large counts (Δβ₀ ≈ ȳ−1); the
-    // standard null init puts step 1 in the quadratic zone. The +1
-    // keeps the ln argument positive; empty input seeds 0.
-    newtonLoop(base, iters, poissonMuFrame,
-      base.agg(sum(col("_c")).as("_n"),
-          sum(col("_c") * col("_y")).as("_sy"))
-        .select(
-          when(col("_n") > 0, round(log(
-            (col("_sy") + 1).cast("double") / col("_n").cast("double"))
-            * 1e6, 0).cast("long")).otherwise(0L).as("b0_micro"),
-          lit(0L).as("b1_micro"), lit(0L).as("b2_micro"))
-        .localCheckpoint())
+    newtonLoop(base, iters, poissonMuFrame, nullSeed(base))
+
+  /** The (x₁, x₂, y) long base of the count fits, with the constant
+    * level weight _c ≡ 1 — NOT [[levelled]]: a count GLM's input is
+    * already an (x, y)-grid — y is in the would-be level key, so the
+    * collapse is an identity that only adds an exchange (measured
+    * +0.4 s on q372's day×hour grid); the constant weight keeps the
+    * one weighted [[newtonLoop]] spelling. Checkpointed: it feeds the
+    * seed, every step and the readout. */
+  private def countBase(df: DataFrame, x1Col: String, x2Col: String,
+                        yCol: String): DataFrame =
+    df.select(col(x1Col).cast("long").as("_x1"),
+        col(x2Col).cast("long").as("_x2"),
+        col(yCol).cast("long").as("_y"))
+      .withColumn("_c", lit(1L))
+      .localCheckpoint()
+
+  /** The calibration readout shared by the count fits: one scoring
+    * pass at the final β under [[poissonMuFrame]] — Σμ (nano-exact)
+    * and the exact integer absolute-error mass. Output 1 row: (n,
+    * b0_micro, b1_micro, b2_micro, sum_y, sum_mu_nano, sae_nano). */
+  private def countReadout(base: DataFrame,
+                           beta: DataFrame): DataFrame =
+    poissonMuFrame(base, beta)
+      // coalesce replays count(1)'s 0-on-empty (sum is NULL there)
+      .agg(coalesce(sum(col("_c")), lit(0L)).as("n"),
+        sum(col("_c") * col("_y")).as("sum_y"),
+        sum(col("_c") * col("_mu")).as("sum_mu_nano"),
+        sum(col("_c") * abs(col("_y") * lit(1000000000L) - col("_mu")))
+          .as("sae_nano"))
+      .crossJoin(broadcast(beta))
+      .select(col("n"), col("b0_micro"), col("b1_micro"),
+        col("b2_micro"), col("sum_y"), col("sum_mu_nano"),
+        col("sae_nano"))
 
   /** DISTRIBUTED POISSON REGRESSION via fixed-iteration IRLS Gram
     * aggregates (log link, two integer features + intercept —
@@ -2002,27 +2072,8 @@ object EvalOps {
     * sum_y, sum_mu_nano, sae_nano). */
   def poissonIrls(df: DataFrame, x1Col: String, x2Col: String,
                   yCol: String, iters: Int): DataFrame = {
-    // _c ≡ 1, NOT [[levelled]]: a count GLM's input is already a
-    // (x, y)-grid — y is in the would-be level key, so the collapse
-    // is an identity that only adds an exchange (measured +0.4 s on
-    // q372's day×hour grid); the constant weight keeps the one
-    // weighted [[newtonLoop]] spelling
-    val base = df.select(col(x1Col).cast("long").as("_x1"),
-        col(x2Col).cast("long").as("_x2"),
-        col(yCol).cast("long").as("_y"))
-      .withColumn("_c", lit(1L))
-      .localCheckpoint() // feeds the seed, every step, and the readout
-    val beta = poissonNewton(base, iters)
-    poissonMuFrame(base, beta)
-      .agg(coalesce(sum(col("_c")), lit(0L)).as("n"),
-        sum(col("_c") * col("_y")).as("sum_y"),
-        sum(col("_c") * col("_mu")).as("sum_mu_nano"),
-        sum(col("_c") * abs(col("_y") * lit(1000000000L) - col("_mu")))
-          .as("sae_nano"))
-      .crossJoin(broadcast(beta))
-      .select(col("n"), col("b0_micro"), col("b1_micro"),
-        col("b2_micro"), col("sum_y"), col("sum_mu_nano"),
-        col("sae_nano"))
+    val base = countBase(df, x1Col, x2Col, yCol)
+    countReadout(base, poissonNewton(base, iters))
   }
 
   /** NEGATIVE-BINOMIAL (NB2) REGRESSION with FIXED dispersion α —
@@ -2053,10 +2104,7 @@ object EvalOps {
                            alphaMicro: Long): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(alphaMicro >= 0, s"alphaMicro must be >= 0, got $alphaMicro")
-    val base = df.select(col(x1Col).cast("long").as("_x1"),
-        col(x2Col).cast("long").as("_x2"),
-        col(yCol).cast("long").as("_y"))
-      .localCheckpoint() // feeds the seed, every step, the readout
+    val base = countBase(df, x1Col, x2Col, yCol)
     def nbFrame(b: DataFrame, beta: DataFrame): DataFrame =
       poissonMuFrame(b, beta)
         .withColumn("_v", lit(1000000L) +
@@ -2065,61 +2113,7 @@ object EvalOps {
         .withColumn("_sc", round((col("_y") * lit(1000000000L) -
           col("_mu")).cast("double") * lit(1e6) /
           col("_v").cast("double")).cast("long"))
-    var beta = base.agg(count(lit(1)).as("_n"), sum(col("_y")).as("_sy"))
-      .select(
-        when(col("_n") > 0, round(log(
-          (col("_sy") + 1).cast("double") / col("_n").cast("double"))
-          * 1e6, 0).cast("long")).otherwise(0L).as("b0_micro"),
-        lit(0L).as("b1_micro"), lit(0L).as("b2_micro"))
-      .localCheckpoint()
-    def det(m11: Column, m12: Column, m13: Column,
-            m21: Column, m22: Column, m23: Column,
-            m31: Column, m32: Column, m33: Column): Column =
-      m11 * (m22 * m33 - m23 * m32) -
-        m12 * (m21 * m33 - m23 * m31) +
-        m13 * (m21 * m32 - m22 * m31)
-    for (_ <- 1 to iters) {
-      val a = nbFrame(base, beta).agg(
-        sum(col("_w")).as("a00"),
-        sum(col("_w") * col("_x1")).as("a01"),
-        sum(col("_w") * col("_x2")).as("a02"),
-        sum(col("_w") * col("_x1") * col("_x1")).as("a11"),
-        sum(col("_w") * col("_x1") * col("_x2")).as("a12"),
-        sum(col("_w") * col("_x2") * col("_x2")).as("a22"),
-        sum(col("_sc")).as("s0"),
-        sum(col("_sc") * col("_x1")).as("s1"),
-        sum(col("_sc") * col("_x2")).as("s2"))
-      def d(c: String): Column = col(c).cast("double")
-      val dA = det(d("a00"), d("a01"), d("a02"),
-        d("a01"), d("a11"), d("a12"), d("a02"), d("a12"), d("a22"))
-      val d0 = det(d("s0"), d("a01"), d("a02"),
-        d("s1"), d("a11"), d("a12"), d("s2"), d("a12"), d("a22"))
-      val d1 = det(d("a00"), d("s0"), d("a02"),
-        d("a01"), d("s1"), d("a12"), d("a02"), d("s2"), d("a22"))
-      val d2 = det(d("a00"), d("a01"), d("s0"),
-        d("a01"), d("a11"), d("s1"), d("a02"), d("a12"), d("s2"))
-      beta = a.crossJoin(broadcast(beta))
-        .select(
-          when(dA =!= 0.0, col("b0_micro") +
-            round(lit(1e3) * d0 / dA).cast("long"))
-            .otherwise(col("b0_micro")).as("b0_micro"),
-          when(dA =!= 0.0, col("b1_micro") +
-            round(lit(1e3) * d1 / dA).cast("long"))
-            .otherwise(col("b1_micro")).as("b1_micro"),
-          when(dA =!= 0.0, col("b2_micro") +
-            round(lit(1e3) * d2 / dA).cast("long"))
-            .otherwise(col("b2_micro")).as("b2_micro"))
-        .localCheckpoint()
-    }
-    poissonMuFrame(base, beta)
-      .agg(count(lit(1)).as("n"), sum(col("_y")).as("sum_y"),
-        sum(col("_mu")).as("sum_mu_nano"),
-        sum(abs(col("_y") * lit(1000000000L) - col("_mu")))
-          .as("sae_nano"))
-      .crossJoin(broadcast(beta))
-      .select(col("n"), col("b0_micro"), col("b1_micro"),
-        col("b2_micro"), col("sum_y"), col("sum_mu_nano"),
-        col("sae_nano"))
+    countReadout(base, newtonLoop(base, iters, nbFrame, nullSeed(base)))
   }
 
   /** GAMMA GLM with LOG LINK (McCullagh & Nelder 1989 §8.3 — the
@@ -2151,10 +2145,7 @@ object EvalOps {
   def gammaIrls(df: DataFrame, x1Col: String, x2Col: String,
                 yCol: String, iters: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val base = df.select(col(x1Col).cast("long").as("_x1"),
-        col(x2Col).cast("long").as("_x2"),
-        col(yCol).cast("long").as("_y"))
-      .localCheckpoint() // feeds the info, every step, the readout
+    val base = countBase(df, x1Col, x2Col, yCol)
     // the log-link Gamma information is beta-free: pay it ONCE
     val info = base.agg(count(lit(1)).as("a00"),
         sum(col("_x1")).as("a01"), sum(col("_x2")).as("a02"),
@@ -2162,60 +2153,13 @@ object EvalOps {
         sum(col("_x1") * col("_x2")).as("a12"),
         sum(col("_x2") * col("_x2")).as("a22"))
       .localCheckpoint()
-    var beta = base.agg(count(lit(1)).as("_n"),
-        sum(col("_y")).as("_sy"))
-      .select(
-        when(col("_n") > 0, round(log(
-          (col("_sy") + 1).cast("double") / col("_n").cast("double"))
-          * 1e6, 0).cast("long")).otherwise(0L).as("b0_micro"),
-        lit(0L).as("b1_micro"), lit(0L).as("b2_micro"))
-      .localCheckpoint()
-    def det(m11: Column, m12: Column, m13: Column,
-            m21: Column, m22: Column, m23: Column,
-            m31: Column, m32: Column, m33: Column): Column =
-      m11 * (m22 * m33 - m23 * m32) -
-        m12 * (m21 * m33 - m23 * m31) +
-        m13 * (m21 * m32 - m22 * m31)
-    for (_ <- 1 to iters) {
-      val s = poissonMuFrame(base, beta)
+    def gammaFrame(b: DataFrame, beta: DataFrame): DataFrame =
+      poissonMuFrame(b, beta)
         .withColumn("_sc", round(lit(1e6) *
           (col("_y") * lit(1000000000L)).cast("double") /
           col("_mu").cast("double")).cast("long") - lit(1000000L))
-        .agg(sum(col("_sc")).as("s0"),
-          sum(col("_sc") * col("_x1")).as("s1"),
-          sum(col("_sc") * col("_x2")).as("s2"))
-      val a = s.crossJoin(broadcast(info))
-      def d(c: String): Column = col(c).cast("double")
-      val dA = det(d("a00"), d("a01"), d("a02"),
-        d("a01"), d("a11"), d("a12"), d("a02"), d("a12"), d("a22"))
-      val d0 = det(d("s0"), d("a01"), d("a02"),
-        d("s1"), d("a11"), d("a12"), d("s2"), d("a12"), d("a22"))
-      val d1 = det(d("a00"), d("s0"), d("a02"),
-        d("a01"), d("s1"), d("a12"), d("a02"), d("s2"), d("a22"))
-      val d2 = det(d("a00"), d("a01"), d("s0"),
-        d("a01"), d("a11"), d("s1"), d("a02"), d("a12"), d("s2"))
-      beta = a.crossJoin(broadcast(beta))
-        .select(
-          when(dA =!= 0.0, col("b0_micro") +
-            round(d0 / dA).cast("long"))
-            .otherwise(col("b0_micro")).as("b0_micro"),
-          when(dA =!= 0.0, col("b1_micro") +
-            round(d1 / dA).cast("long"))
-            .otherwise(col("b1_micro")).as("b1_micro"),
-          when(dA =!= 0.0, col("b2_micro") +
-            round(d2 / dA).cast("long"))
-            .otherwise(col("b2_micro")).as("b2_micro"))
-        .localCheckpoint()
-    }
-    poissonMuFrame(base, beta)
-      .agg(count(lit(1)).as("n"), sum(col("_y")).as("sum_y"),
-        sum(col("_mu")).as("sum_mu_nano"),
-        sum(abs(col("_y") * lit(1000000000L) - col("_mu")))
-          .as("sae_nano"))
-      .crossJoin(broadcast(beta))
-      .select(col("n"), col("b0_micro"), col("b1_micro"),
-        col("b2_micro"), col("sum_y"), col("sum_mu_nano"),
-        col("sae_nano"))
+    countReadout(base, newtonLoop(base, iters, gammaFrame,
+      nullSeed(base), info = Some(info)))
   }
 
   /** TWO-SAMPLE KOLMOGOROV–SMIRNOV TEST (Kolmogorov 1933; Smirnov
@@ -2368,12 +2312,7 @@ object EvalOps {
   def poissonOverdispersion(df: DataFrame, x1Col: String,
                             x2Col: String, yCol: String, iters: Int,
                             zCritMicro: Long): DataFrame = {
-    // _c ≡ 1, NOT [[levelled]] — the [[poissonIrls]] grid argument
-    val base = df.select(col(x1Col).cast("long").as("_x1"),
-        col(x2Col).cast("long").as("_x2"),
-        col(yCol).cast("long").as("_y"))
-      .withColumn("_c", lit(1L))
-      .localCheckpoint() // feeds the fit AND the readout
+    val base = countBase(df, x1Col, x2Col, yCol)
     val beta = poissonNewton(base, iters)
     poissonMuFrame(base, beta)
       .withColumn("_d", (col("_y") * lit(1000000000L) - col("_mu"))
@@ -2513,61 +2452,110 @@ object EvalOps {
     * state. Output 1 row: (n, events, b_micro, hr_micro, se_micro,
     * u_final_micro, i_micro). */
   def coxPh(df: DataFrame, durationCol: String, eventCol: String,
-            xCol: String, iters: Int): DataFrame = {
+            xCol: String, iters: Int): DataFrame =
+    coxPh1(df, None, durationCol, eventCol, xCol, iters)
+
+  /** The Breslow risk-set pass behind every Cox fit ([[coxPh]],
+    * [[coxPhStratified]], [[coxPh2]]) at the β in the 1-row frame
+    * `beta`: per subject φ = e^{Σ x_a·β_a} fixed to integer nano; ONE
+    * hash aggregate to per-duration cells (keyed by (_g, _t) when
+    * `strata`), the suffix risk-set window over duration levels
+    * (partitioned by the stratum _g when `strata`), then the per-level
+    * micro score/information terms and their cross-level sums. `xb`
+    * pairs each covariate column with its β column; covariate i is
+    * tagged 'a', 'b', … Output 1 row: _su<a> per covariate and
+    * _si<a><b> per a ≤ b. Suffix-sum names must not collide
+    * case-insensitively with the level sums (_sa/_sb): Spark's
+    * default resolver treats _Sa == _sa and withColumn would silently
+    * REPLACE the event sums with nano-scale risk moments (caught by
+    * the round-16 planted-effect spec) — hence _Sva/_Sqab, the
+    * oracle's names. */
+  private def coxPass(base: DataFrame, beta: DataFrame,
+                      xb: Seq[(String, String)],
+                      strata: Boolean): DataFrame = {
+    val tags = xb.indices.map(i => ('a' + i).toChar.toString)
+    val x = tags.zip(xb.map(p => col(p._1))).toMap
+    val pairs = for (i <- tags.indices; j <- i until tags.size)
+      yield (tags(i), tags(j))
+    val keys = (if (strata) Seq(col("_g")) else Nil) :+ col("_t")
+    val lev = base.crossJoin(broadcast(beta))
+      .withColumn("_phi", round(lit(1e9) *
+        exp(xb.map { case (xc, bc) => col(xc) * col(bc) }.reduce(_ + _)
+          .cast("double") / lit(1e6))).cast("long"))
+      .groupBy(keys: _*)
+      .agg(sum(col("_phi")).as("_g0"),
+        tags.map(a => sum(x(a) * col("_phi")).as(s"_g$a")) ++
+        pairs.map { case (a, b) =>
+          sum(x(a) * x(b) * col("_phi")).as(s"_g$a$b") } ++
+        (sum(when(col("_e"), 1L).otherwise(0L)).as("_d") +:
+          tags.map(a =>
+            sum(when(col("_e"), x(a)).otherwise(0L)).as(s"_s$a"))): _*)
+    val w = Window.partitionBy(keys.init: _*).orderBy(col("_t"))
+      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
+    def dd(c: String): Column = col(c).cast("double")
+    val risk = (Seq(("_rs0", "_g0")) ++
+      tags.map(a => (s"_Sv$a", s"_g$a")) ++
+      pairs.map { case (a, b) => (s"_Sq$a$b", s"_g$a$b") })
+      .foldLeft(lev) { case (f, (r, g)) =>
+        f.withColumn(r, sum(col(g)).over(w)) }
+    val terms = tags.map(a =>
+      round((dd(s"_s$a") - dd("_d") * (dd(s"_Sv$a") / dd("_rs0")))
+        * 1e6).cast("long").as(s"_u${a}6")) ++
+      pairs.map { case (a, b) =>
+        round(dd("_d") * (dd(s"_Sq$a$b") / dd("_rs0") -
+          (dd(s"_Sv$a") / dd("_rs0")) * (dd(s"_Sv$b") / dd("_rs0"))) * 1e6)
+          .cast("long").as(s"_i$a${b}6") }
+    val sums = tags.map(a => sum(col(s"_u${a}6")).as(s"_su$a")) ++
+      pairs.map { case (a, b) => sum(col(s"_i$a${b}6")).as(s"_si$a$b") }
+    risk.where(col("_d") > 0 && col("_rs0") > 0)
+      .select(terms: _*)
+      .agg(sums.head, sums.tail: _*)
+  }
+
+  /** The one-covariate Cox fit behind [[coxPh]] and
+    * [[coxPhStratified]]: `stratumCol` keys the [[coxPass]] risk sets
+    * per stratum when given. β⁰ = 0; each step β ← β + round(10⁶·U/I),
+    * frozen when I ≤ 0, then one localCheckpoint of the 1-row β
+    * frame; the readout scores the final β once more. */
+  private def coxPh1(df: DataFrame, stratumCol: Option[String],
+                     durationCol: String, eventCol: String,
+                     xCol: String, iters: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val base = df.select(col(durationCol).cast("long").as("_t"),
+    val g = stratumCol.map(c => col(c).cast("long").as("_g")).toSeq
+    val base = df.select(g ++ Seq(col(durationCol).cast("long").as("_t"),
         col(eventCol).cast("boolean").as("_e"),
-        col(xCol).cast("long").as("_x"))
+        col(xCol).cast("long").as("_x")): _*)
       .localCheckpoint() // feeds every Newton step AND the readout
     val spark = base.sparkSession
     import spark.implicits._
+    val strata = g.nonEmpty
+    def ui(b: DataFrame): DataFrame =
+      coxPass(base, b, Seq("_x" -> "b_micro"), strata)
     var beta = Seq(Tuple1(0L)).toDF("b_micro")
-    def ui(b: DataFrame): DataFrame = {
-      val lev = base.crossJoin(broadcast(b))
-        .withColumn("_phi", round(lit(1e9) *
-          exp((col("_x") * col("b_micro")).cast("double") / lit(1e6)))
-          .cast("long"))
-        .groupBy(col("_t"))
-        .agg(sum(col("_phi")).as("_g0"),
-          sum(col("_x") * col("_phi")).as("_g1"),
-          sum(col("_x") * col("_x") * col("_phi")).as("_g2"),
-          sum(when(col("_e"), 1L).otherwise(0L)).as("_d"),
-          sum(when(col("_e"), col("_x")).otherwise(0L)).as("_s"))
-      val w = Window.orderBy(col("_t"))
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-      def dd(c: String): Column = col(c).cast("double")
-      lev
-        .withColumn("_rs0", sum(col("_g0")).over(w))
-        .withColumn("_S1", sum(col("_g1")).over(w))
-        .withColumn("_S2", sum(col("_g2")).over(w))
-        .where(col("_d") > 0 && col("_rs0") > 0)
-        .select(
-          round((dd("_s") - dd("_d") * (dd("_S1") / dd("_rs0"))) * 1e6)
-            .cast("long").as("_u6"),
-          round(dd("_d") * (dd("_S2") / dd("_rs0") -
-            (dd("_S1") / dd("_rs0")) * (dd("_S1") / dd("_rs0"))) * 1e6)
-            .cast("long").as("_i6"))
-        .agg(sum(col("_u6")).as("_su"), sum(col("_i6")).as("_si"))
-    }
     for (_ <- 1 to iters) {
       beta = ui(beta).crossJoin(broadcast(beta))
-        .select(when(col("_si") > 0, col("b_micro") +
-          round(lit(1e6) * col("_su").cast("double") /
-            col("_si").cast("double")).cast("long"))
+        .select(when(col("_siaa") > 0, col("b_micro") +
+          round(lit(1e6) * col("_sua").cast("double") /
+            col("_siaa").cast("double")).cast("long"))
           .otherwise(col("b_micro")).as("b_micro"))
         .localCheckpoint()
     }
     val tot = base.agg(count(lit(1)).as("n"),
-      sum(when(col("_e"), 1L).otherwise(0L)).as("events"))
+      sum(when(col("_e"), 1L).otherwise(0L)).as("events") +:
+        (if (strata) Seq(countDistinct(col("_g")).as("k_strata"))
+         else Nil): _*)
+    // (n, events[, k_strata]) then the fit readout
     tot.crossJoin(broadcast(ui(beta))).crossJoin(broadcast(beta))
-      .select(col("n"), col("events"), col("b_micro"),
+      .select((tot.columns.toSeq :+ "b_micro").map(col) ++ Seq(
         round(lit(1e6) * exp(col("b_micro").cast("double") / lit(1e6)))
           .cast("long").as("hr_micro"),
-        when(col("_si") > 0, round(lit(1e6) /
-          sqrt(col("_si").cast("double") / lit(1e6))).cast("long"))
+        when(col("_siaa") > 0, round(lit(1e6) /
+          sqrt(col("_siaa").cast("double") / lit(1e6))).cast("long"))
           .as("se_micro"),
-        col("_su").as("u_final_micro"), col("_si").as("i_micro"))
+        col("_sua").as("u_final_micro"),
+        col("_siaa").as("i_micro")): _*)
   }
+
   /** STRATIFIED COX PH (Cox 1972 §5's stratified partial likelihood
     * — adjust for a categorical confounder WITHOUT modeling it:
     * each stratum keeps its OWN baseline hazard and risk sets, the
@@ -2586,64 +2574,8 @@ object EvalOps {
     * i_micro). */
   def coxPhStratified(df: DataFrame, stratumCol: String,
                       durationCol: String, eventCol: String,
-                      xCol: String, iters: Int): DataFrame = {
-    require(iters >= 1, s"iters must be >= 1, got $iters")
-    val base = df.select(col(stratumCol).cast("long").as("_g"),
-        col(durationCol).cast("long").as("_t"),
-        col(eventCol).cast("boolean").as("_e"),
-        col(xCol).cast("long").as("_x"))
-      .localCheckpoint() // feeds every Newton step AND the readout
-    val spark = base.sparkSession
-    import spark.implicits._
-    var beta = Seq(Tuple1(0L)).toDF("b_micro")
-    def ui(b: DataFrame): DataFrame = {
-      val lev = base.crossJoin(broadcast(b))
-        .withColumn("_phi", round(lit(1e9) *
-          exp((col("_x") * col("b_micro")).cast("double") / lit(1e6)))
-          .cast("long"))
-        .groupBy(col("_g"), col("_t"))
-        .agg(sum(col("_phi")).as("_g0"),
-          sum(col("_x") * col("_phi")).as("_g1"),
-          sum(col("_x") * col("_x") * col("_phi")).as("_g2"),
-          sum(when(col("_e"), 1L).otherwise(0L)).as("_d"),
-          sum(when(col("_e"), col("_x")).otherwise(0L)).as("_s"))
-      val w = Window.partitionBy(col("_g")).orderBy(col("_t"))
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-      def dd(c: String): Column = col(c).cast("double")
-      lev
-        .withColumn("_rs0", sum(col("_g0")).over(w))
-        .withColumn("_S1", sum(col("_g1")).over(w))
-        .withColumn("_S2", sum(col("_g2")).over(w))
-        .where(col("_d") > 0 && col("_rs0") > 0)
-        .select(
-          round((dd("_s") - dd("_d") * (dd("_S1") / dd("_rs0"))) * 1e6)
-            .cast("long").as("_u6"),
-          round(dd("_d") * (dd("_S2") / dd("_rs0") -
-            (dd("_S1") / dd("_rs0")) * (dd("_S1") / dd("_rs0"))) * 1e6)
-            .cast("long").as("_i6"))
-        .agg(sum(col("_u6")).as("_su"), sum(col("_i6")).as("_si"))
-    }
-    for (_ <- 1 to iters) {
-      beta = ui(beta).crossJoin(broadcast(beta))
-        .select(when(col("_si") > 0, col("b_micro") +
-          round(lit(1e6) * col("_su").cast("double") /
-            col("_si").cast("double")).cast("long"))
-          .otherwise(col("b_micro")).as("b_micro"))
-        .localCheckpoint()
-    }
-    val tot = base.agg(count(lit(1)).as("n"),
-      sum(when(col("_e"), 1L).otherwise(0L)).as("events"),
-      countDistinct(col("_g")).as("k_strata"))
-    tot.crossJoin(broadcast(ui(beta))).crossJoin(broadcast(beta))
-      .select(col("n"), col("events"), col("k_strata"),
-        col("b_micro"),
-        round(lit(1e6) * exp(col("b_micro").cast("double") / lit(1e6)))
-          .cast("long").as("hr_micro"),
-        when(col("_si") > 0, round(lit(1e6) /
-          sqrt(col("_si").cast("double") / lit(1e6))).cast("long"))
-          .as("se_micro"),
-        col("_su").as("u_final_micro"), col("_si").as("i_micro"))
-  }
+                      xCol: String, iters: Int): DataFrame =
+    coxPh1(df, Some(stratumCol), durationCol, eventCol, xCol, iters)
 
   /** O'Brien–Fleming-shape boundaries c·√(K/k) for K looks, micro-
     * fixed on the DRIVER (normal-quantile design constants, the q341
@@ -3042,8 +2974,7 @@ object EvalOps {
     // so the per-class oracle chains still hash-match.
     val betas = ovrBetaWide(base, labels, iters)
     val scored = base.crossJoin(broadcast(betas))
-    val zs = labels.indices.map(i => col(s"_b0_$i") +
-      col("_x1") * col(s"_b1_$i") + col("_x2") * col(s"_b2_$i"))
+    val zs = labels.indices.map(i => wideZ(s"_$i"))
     ovrConfReadout(scored.withColumn("_pred",
       ovrPredCol(labels, zs)), sum(col("_c")))
   }
@@ -3052,78 +2983,34 @@ object EvalOps {
     * [[logisticOvrBetas]]: `base` must be the [[levelled]] collapse
     * carrying (_x1, _x2, _lab, _c) long columns (checkpointed by the
     * caller — every step scans it, and it is feature-domain bounded).
-    * Returns the WIDE 1-row β frame (_b0_i, _b1_i, _b2_i per class
-    * index i), each step ONE map-side-combinable aggregate of the
-    * K×9 sums and one K-fold Cramer projection. */
+    * Returns the WIDE 1-row β frame (b0_micro_i, b1_micro_i,
+    * b2_micro_i per class index i), each step ONE
+    * map-side-combinable aggregate of the K×9 sums and one K-fold
+    * Cramer projection — [[newtonLoop]] with the logistic
+    * projection per class. */
   private def ovrBetaWide(base: DataFrame, labels: Seq[Long],
                           iters: Int): DataFrame = {
-    val ks = labels.indices
-    var betas = base.sparkSession.createDataFrame(
-      Seq(Tuple1(0L))).toDF("_zero")
-      .select(ks.flatMap(i => Seq(lit(0L).as(s"_b0_$i"),
-        lit(0L).as(s"_b1_$i"), lit(0L).as(s"_b2_$i"))): _*)
-    def det(m11: Column, m12: Column, m13: Column,
-            m21: Column, m22: Column, m23: Column,
-            m31: Column, m32: Column, m33: Column): Column =
-      m11 * (m22 * m33 - m23 * m32) -
-        m12 * (m21 * m33 - m23 * m31) +
-        m13 * (m21 * m32 - m22 * m31)
-    for (_ <- 1 to iters) {
-      var m = base.crossJoin(broadcast(betas))
-      ks.foreach { i =>
-        m = m.withColumn(s"_zm$i", col(s"_b0_$i") +
-            col("_x1") * col(s"_b1_$i") + col("_x2") * col(s"_b2_$i"))
-          .withColumn(s"_mu$i", round(lit(1e9) / (lit(1.0) +
+    val fits = labels.indices.map(i => s"_$i")
+    def muFrame(b: DataFrame, beta: DataFrame): DataFrame =
+      labels.indices.foldLeft(b.crossJoin(broadcast(beta))) { (m, i) =>
+        m.withColumn(s"_zm$i", wideZ(s"_$i"))
+          .withColumn(s"_mu_$i", round(lit(1e9) / (lit(1.0) +
             exp(-(col(s"_zm$i").cast("double") / lit(1e6)))))
             .cast("long"))
-          .withColumn(s"_w$i",
-            expr(s"(_mu$i * (1000000000L - _mu$i)) " +
+          .withColumn(s"_w_$i",
+            expr(s"(_mu_$i * (1000000000L - _mu_$i)) " +
               "div 1000000000000L"))
-          .withColumn(s"_y$i",
-            when(col("_lab") === labels(i), 1L).otherwise(0L))
+          .withColumn(s"_sc_$i",
+            when(col("_lab") === labels(i), 1L).otherwise(0L) *
+              lit(1000000000L) - col(s"_mu_$i"))
       }
-      val aggs = ks.flatMap { i =>
-        val cc = col("_c")
-        val w = col(s"_w$i"); val mu = col(s"_mu$i")
-        val sc = col(s"_y$i") * lit(1000000000L) - mu
-        Seq(sum(cc * w).as(s"a00_$i"),
-          sum(cc * w * col("_x1")).as(s"a01_$i"),
-          sum(cc * w * col("_x2")).as(s"a02_$i"),
-          sum(cc * w * col("_x1") * col("_x1")).as(s"a11_$i"),
-          sum(cc * w * col("_x1") * col("_x2")).as(s"a12_$i"),
-          sum(cc * w * col("_x2") * col("_x2")).as(s"a22_$i"),
-          sum(cc * sc).as(s"s0_$i"),
-          sum(cc * sc * col("_x1")).as(s"s1_$i"),
-          sum(cc * sc * col("_x2")).as(s"s2_$i"))
-      }
-      val a = m.agg(aggs.head, aggs.tail: _*)
-      betas = a.crossJoin(broadcast(betas))
-        .select(ks.flatMap { i =>
-          def d(c: String): Column = col(c + s"_$i").cast("double")
-          val dA = det(d("a00"), d("a01"), d("a02"),
-            d("a01"), d("a11"), d("a12"), d("a02"), d("a12"),
-            d("a22"))
-          val d0 = det(d("s0"), d("a01"), d("a02"),
-            d("s1"), d("a11"), d("a12"), d("s2"), d("a12"), d("a22"))
-          val d1 = det(d("a00"), d("s0"), d("a02"),
-            d("a01"), d("s1"), d("a12"), d("a02"), d("s2"), d("a22"))
-          val d2 = det(d("a00"), d("a01"), d("s0"),
-            d("a01"), d("a11"), d("s1"), d("a02"), d("a12"), d("s2"))
-          Seq(
-            when(dA =!= 0.0, col(s"_b0_$i") +
-              round(lit(1e3) * d0 / dA).cast("long"))
-              .otherwise(col(s"_b0_$i")).as(s"_b0_$i"),
-            when(dA =!= 0.0, col(s"_b1_$i") +
-              round(lit(1e3) * d1 / dA).cast("long"))
-              .otherwise(col(s"_b1_$i")).as(s"_b1_$i"),
-            when(dA =!= 0.0, col(s"_b2_$i") +
-              round(lit(1e3) * d2 / dA).cast("long"))
-              .otherwise(col(s"_b2_$i")).as(s"_b2_$i"))
-        }: _*)
-        .localCheckpoint()
-    }
-    betas
+    newtonLoop(base, iters, muFrame, zeroBeta(base, fits), fits)
   }
+
+  /** Fit k's exact integer micro margin z = β₀ + β₁x₁ + β₂x₂ over a
+    * wide β frame's (b0_micro<k>, b1_micro<k>, b2_micro<k>). */
+  private def wideZ(k: String): Column = col(s"b0_micro$k") +
+    col("_x1") * col(s"b1_micro$k") + col("_x2") * col(s"b2_micro$k")
 
   /** First-max argmax over exact integer margins: label i wins iff
     * z_i >= every LATER margin (chained when ⇒ ties to the earliest
@@ -3186,7 +3073,8 @@ object EvalOps {
     ovrBetaWide(base, labels, iters)
       .select(expr(s"stack(${labels.size}, " +
         labels.indices.map(i =>
-          s"${labels(i)}L, _b0_$i, _b1_$i, _b2_$i").mkString(", ") +
+          s"${labels(i)}L, b0_micro_$i, b1_micro_$i, b2_micro_$i")
+          .mkString(", ") +
         ") as (label, b0_micro, b1_micro, b2_micro)"))
   }
 
@@ -3407,12 +3295,10 @@ object EvalOps {
       .localCheckpoint() // feeds every fused step AND the scoring
     val ks = 1 until labels.size // non-reference classes
     val betas = softmaxBetaWide(base, labels, iters)
-    def zOf(i: Int): Column = col(s"_b0_$i") +
-      col("_x1") * col(s"_b1_$i") + col("_x2") * col(s"_b2_$i")
     // argmax over (z_ref = 0, z_1..z_{K-1}) exact integers, ties to
     // the earliest label — identical rule to [[logisticOvr]]
     var scored = base.crossJoin(broadcast(betas))
-    ks.foreach(i => scored = scored.withColumn(s"_z$i", zOf(i)))
+    ks.foreach(i => scored = scored.withColumn(s"_z$i", wideZ(s"_$i")))
     val zs = lit(0L) +: ks.map(i => col(s"_z$i")).toSeq
     ovrConfReadout(scored.withColumn("_pred",
       ovrPredCol(labels, zs)), sum(col("_c")))
@@ -3422,85 +3308,35 @@ object EvalOps {
     * [[softmaxGlmBetas]]: `base` is the [[levelled]] collapse
     * carrying (_x1, _x2, _lab, _c) (checkpointed by the caller —
     * feature-domain bounded). Returns the WIDE 1-row β frame
-    * (_b0_i/_b1_i/_b2_i for non-reference class indices 1..K−1). */
+    * (b0_micro_i/b1_micro_i/b2_micro_i for non-reference class
+    * indices 1..K−1) — [[newtonLoop]] with the max-shifted softmax
+    * projection. */
   private def softmaxBetaWide(base: DataFrame, labels: Seq[Long],
                               iters: Int): DataFrame = {
     val ks = 1 until labels.size // non-reference classes
-    var betas = base.sparkSession.createDataFrame(
-      Seq(Tuple1(0L))).toDF("_zero")
-      .select(ks.flatMap(i => Seq(lit(0L).as(s"_b0_$i"),
-        lit(0L).as(s"_b1_$i"), lit(0L).as(s"_b2_$i"))).toSeq: _*)
-    def zOf(i: Int): Column = col(s"_b0_$i") +
-      col("_x1") * col(s"_b1_$i") + col("_x2") * col(s"_b2_$i")
-    def det(m11: Column, m12: Column, m13: Column,
-            m21: Column, m22: Column, m23: Column,
-            m31: Column, m32: Column, m33: Column): Column =
-      m11 * (m22 * m33 - m23 * m32) -
-        m12 * (m21 * m33 - m23 * m31) +
-        m13 * (m21 * m32 - m22 * m31)
-    def softmaxed(d0: DataFrame): DataFrame = {
-      var m = d0
-      ks.foreach(i => m = m.withColumn(s"_z$i", zOf(i)))
+    def muFrame(b: DataFrame, beta: DataFrame): DataFrame = {
+      var m = b.crossJoin(broadcast(beta))
+      ks.foreach(i => m = m.withColumn(s"_z$i", wideZ(s"_$i")))
       m = m.withColumn("_zmx",
         greatest((lit(0L) +: ks.map(i => col(s"_z$i")).toSeq): _*))
       m = m.withColumn("_e0",
         exp((lit(0L) - col("_zmx")).cast("double") / lit(1e6)))
       ks.foreach(i => m = m.withColumn(s"_e$i",
         exp((col(s"_z$i") - col("_zmx")).cast("double") / lit(1e6))))
-      m.withColumn("_den",
+      m = m.withColumn("_den",
         ks.map(i => col(s"_e$i")).foldLeft(col("_e0"))(_ + _))
-    }
-    for (_ <- 1 to iters) {
-      var m = softmaxed(base.crossJoin(broadcast(betas)))
-      ks.foreach { i =>
-        m = m.withColumn(s"_p$i", round(lit(1e9) * col(s"_e$i") /
+      ks.foldLeft(m) { (f, i) =>
+        f.withColumn(s"_p$i", round(lit(1e9) * col(s"_e$i") /
             col("_den")).cast("long"))
-          .withColumn(s"_w$i",
+          .withColumn(s"_w_$i",
             expr(s"(_p$i * (1000000000L - _p$i)) div 1000000000000L"))
-          .withColumn(s"_y$i",
-            when(col("_lab") === labels(i), 1L).otherwise(0L))
+          .withColumn(s"_sc_$i",
+            when(col("_lab") === labels(i), 1L).otherwise(0L) *
+              lit(1000000000L) - col(s"_p$i"))
       }
-      val aggs = ks.flatMap { i =>
-        val cc = col("_c")
-        val w = col(s"_w$i")
-        val sc = col(s"_y$i") * lit(1000000000L) - col(s"_p$i")
-        Seq(sum(cc * w).as(s"a00_$i"),
-          sum(cc * w * col("_x1")).as(s"a01_$i"),
-          sum(cc * w * col("_x2")).as(s"a02_$i"),
-          sum(cc * w * col("_x1") * col("_x1")).as(s"a11_$i"),
-          sum(cc * w * col("_x1") * col("_x2")).as(s"a12_$i"),
-          sum(cc * w * col("_x2") * col("_x2")).as(s"a22_$i"),
-          sum(cc * sc).as(s"s0_$i"),
-          sum(cc * sc * col("_x1")).as(s"s1_$i"),
-          sum(cc * sc * col("_x2")).as(s"s2_$i"))
-      }.toSeq
-      val a = m.agg(aggs.head, aggs.tail: _*)
-      betas = a.crossJoin(broadcast(betas))
-        .select(ks.flatMap { i =>
-          def d(c: String): Column = col(c + s"_$i").cast("double")
-          val dA = det(d("a00"), d("a01"), d("a02"),
-            d("a01"), d("a11"), d("a12"), d("a02"), d("a12"),
-            d("a22"))
-          val d0 = det(d("s0"), d("a01"), d("a02"),
-            d("s1"), d("a11"), d("a12"), d("s2"), d("a12"), d("a22"))
-          val d1 = det(d("a00"), d("s0"), d("a02"),
-            d("a01"), d("s1"), d("a12"), d("a02"), d("s2"), d("a22"))
-          val d2 = det(d("a00"), d("a01"), d("s0"),
-            d("a01"), d("a11"), d("s1"), d("a02"), d("a12"), d("s2"))
-          Seq(
-            when(dA =!= 0.0, col(s"_b0_$i") +
-              round(lit(1e3) * d0 / dA).cast("long"))
-              .otherwise(col(s"_b0_$i")).as(s"_b0_$i"),
-            when(dA =!= 0.0, col(s"_b1_$i") +
-              round(lit(1e3) * d1 / dA).cast("long"))
-              .otherwise(col(s"_b1_$i")).as(s"_b1_$i"),
-            when(dA =!= 0.0, col(s"_b2_$i") +
-              round(lit(1e3) * d2 / dA).cast("long"))
-              .otherwise(col(s"_b2_$i")).as(s"_b2_$i"))
-        }.toSeq: _*)
-        .localCheckpoint()
     }
-    betas
+    val fits = ks.map(i => s"_$i")
+    newtonLoop(base, iters, muFrame, zeroBeta(base, fits), fits)
   }
 
   /** The softmax fit as a (K−1)-ROW β ARTIFACT (label, b0_micro,
@@ -3524,7 +3360,8 @@ object EvalOps {
     softmaxBetaWide(base, labels, iters)
       .select(expr(s"stack(${labels.size - 1}, " +
         (1 until labels.size).map(i =>
-          s"${labels(i)}L, _b0_$i, _b1_$i, _b2_$i").mkString(", ") +
+          s"${labels(i)}L, b0_micro_$i, b1_micro_$i, b2_micro_$i")
+          .mkString(", ") +
         ") as (label, b0_micro, b1_micro, b2_micro)"))
   }
 
@@ -3685,57 +3522,8 @@ object EvalOps {
     val spark = base.sparkSession
     import spark.implicits._
     var beta = Seq(Tuple2(0L, 0L)).toDF("b1_micro", "b2_micro")
-    def ui(b: DataFrame): DataFrame = {
-      val lev = base.crossJoin(broadcast(b))
-        .withColumn("_phi", round(lit(1e9) *
-          exp((col("_x1") * col("b1_micro") +
-            col("_x2") * col("b2_micro")).cast("double") / lit(1e6)))
-          .cast("long"))
-        .groupBy(col("_t"))
-        .agg(sum(col("_phi")).as("_g0"),
-          sum(col("_x1") * col("_phi")).as("_ga"),
-          sum(col("_x2") * col("_phi")).as("_gb"),
-          sum(col("_x1") * col("_x1") * col("_phi")).as("_gaa"),
-          sum(col("_x1") * col("_x2") * col("_phi")).as("_gab"),
-          sum(col("_x2") * col("_x2") * col("_phi")).as("_gbb"),
-          sum(when(col("_e"), 1L).otherwise(0L)).as("_d"),
-          sum(when(col("_e"), col("_x1")).otherwise(0L)).as("_sa"),
-          sum(when(col("_e"), col("_x2")).otherwise(0L)).as("_sb"))
-      val w = Window.orderBy(col("_t"))
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-      def dd(c: String): Column = col(c).cast("double")
-      lev
-        // suffix-sum names must not collide case-insensitively with
-        // the level sums (_sa/_sb): Spark's default resolver treats
-        // _Sa == _sa and withColumn would silently REPLACE the event
-        // sums with nano-scale risk moments (caught by the round-16
-        // planted-effect spec) — hence _Sva/_Svb, the oracle's names
-        .withColumn("_rs0", sum(col("_g0")).over(w))
-        .withColumn("_Sva", sum(col("_ga")).over(w))
-        .withColumn("_Svb", sum(col("_gb")).over(w))
-        .withColumn("_Sqaa", sum(col("_gaa")).over(w))
-        .withColumn("_Sqab", sum(col("_gab")).over(w))
-        .withColumn("_Sqbb", sum(col("_gbb")).over(w))
-        .where(col("_d") > 0 && col("_rs0") > 0)
-        .select(
-          round((dd("_sa") - dd("_d") * (dd("_Sva") / dd("_rs0")))
-            * 1e6).cast("long").as("_ua6"),
-          round((dd("_sb") - dd("_d") * (dd("_Svb") / dd("_rs0")))
-            * 1e6).cast("long").as("_ub6"),
-          round(dd("_d") * (dd("_Sqaa") / dd("_rs0") -
-            (dd("_Sva") / dd("_rs0")) * (dd("_Sva") / dd("_rs0"))) * 1e6)
-            .cast("long").as("_iaa6"),
-          round(dd("_d") * (dd("_Sqab") / dd("_rs0") -
-            (dd("_Sva") / dd("_rs0")) * (dd("_Svb") / dd("_rs0"))) * 1e6)
-            .cast("long").as("_iab6"),
-          round(dd("_d") * (dd("_Sqbb") / dd("_rs0") -
-            (dd("_Svb") / dd("_rs0")) * (dd("_Svb") / dd("_rs0"))) * 1e6)
-            .cast("long").as("_ibb6"))
-        .agg(sum(col("_ua6")).as("_sua"), sum(col("_ub6")).as("_sub"),
-          sum(col("_iaa6")).as("_siaa"),
-          sum(col("_iab6")).as("_siab"),
-          sum(col("_ibb6")).as("_sibb"))
-    }
+    def ui(b: DataFrame): DataFrame = coxPass(base, b,
+      Seq("_x1" -> "b1_micro", "_x2" -> "b2_micro"), strata = false)
     for (_ <- 1 to iters) {
       val u = ui(beta)
       def d(c: String): Column = col(c).cast("double")

@@ -1,5 +1,7 @@
 package graft.ops
 
+import org.apache.spark.sql.Column
+
 /** Driver-side STRAIGHT-LINE linear algebra mirroring the oracle's
   * SQL spelling bit for bit (round-17 verdict task 1 — the
   * d-covariate generalization of the unrolled 3×3 Cramer solves):
@@ -64,4 +66,16 @@ private[graft] object LinAlg {
     * isfinite(...) AND-chain the same way). */
   def allFinite(xs: Array[Double]): Boolean =
     xs.forall(java.lang.Double.isFinite)
+
+  /** The 3×3 determinant as a Column, by cofactor expansion along
+    * the first row — the one Spark spelling of every unrolled 3×3
+    * Cramer solve (the GLM Newton steps in [[EvalOps]], the ridge
+    * solve in [[AggOps]]), term for term the DuckDB twin's
+    * `cramer3Sql` in SparkEntry. */
+  def det(m11: Column, m12: Column, m13: Column,
+          m21: Column, m22: Column, m23: Column,
+          m31: Column, m32: Column, m33: Column): Column =
+    m11 * (m22 * m33 - m23 * m32) -
+      m12 * (m21 * m33 - m23 * m31) +
+      m13 * (m21 * m32 - m22 * m31)
 }

@@ -148,8 +148,7 @@ class ApiSurfaceSpec extends AnyFunSuite {
   test("multi-path CSV scan is an implicit UNION ALL of per-file scans " +
        "(S1, the reference's daily-file ingest)") {
     val nation = Tables.load(spark, dir, "nation")
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "csv_multi")
+    val base = SparkTestSession.tmpDir("csv_multi")
     val (d1, d2) = (s"$base/day1", s"$base/day2")
     nation.filter(col("n_nationkey") < 12)
       .write.option("header", "true").csv(d1)

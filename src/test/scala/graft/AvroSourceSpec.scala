@@ -21,7 +21,7 @@ class AvroSourceSpec extends AnyFunSuite {
 
   test("avro round-trip is identity on the part table") {
     val src = Tables.load(spark, dir, "part")
-    val path = "/root/repo/target/avro_cache/spec_part"
+    val path = SparkTestSession.tmpDir("spec_part").toString
     AvroIO.write(src, path)
     val back = spark.read.format("graft-avro").schema(src.schema)
       .load(path)
@@ -40,7 +40,7 @@ class AvroSourceSpec extends AnyFunSuite {
       (3L, Some(""), Some(java.sql.Timestamp.valueOf("1969-12-31 23:59:59.999999")),
         Some(-0.0))
     ).toDF("id", "s", "ts", "v")
-    val path = "/root/repo/target/avro_cache/spec_types"
+    val path = SparkTestSession.tmpDir("spec_types").toString
     AvroIO.write(src, path)
     val back = spark.read.format("graft-avro").schema(src.schema)
       .load(path)
@@ -52,7 +52,7 @@ class AvroSourceSpec extends AnyFunSuite {
   test("column pruning reaches the scan: a two-column projection reads " +
        "a two-field avro reader schema") {
     val src = Tables.load(spark, dir, "part")
-    val path = "/root/repo/target/avro_cache/spec_prune"
+    val path = SparkTestSession.tmpDir("spec_prune").toString
     AvroIO.write(src, path)
     val q = spark.read.format("graft-avro").schema(src.schema).load(path)
       .select(col("p_brand"), col("p_size"))
@@ -72,7 +72,7 @@ class AvroSourceSpec extends AnyFunSuite {
        "every row exactly once") {
     val src = Tables.load(spark, dir, "part")
       .select(col("p_partkey"), col("p_size"))
-    val path = "/root/repo/target/avro_cache/spec_stream"
+    val path = SparkTestSession.tmpDir("spec_stream").toString
     AvroIO.write(src.repartition(3), path)
     val stream = spark.readStream.format("graft-avro").schema(src.schema)
       .option("maxFilesPerTrigger", "1").load(path)
@@ -95,7 +95,7 @@ class AvroSourceSpec extends AnyFunSuite {
   test("schema inference reads ONE container header (writer schema is " +
        "file metadata) and matches the written frame") {
     val src = Tables.load(spark, dir, "part")
-    val path = "/root/repo/target/avro_cache/spec_infer"
+    val path = SparkTestSession.tmpDir("spec_infer").toString
     AvroIO.write(src, path)
     val inferred = spark.read.format("graft-avro").load(path)
     assert(inferred.schema.fields.map(f => (f.name, f.dataType)).toSeq ===
@@ -113,7 +113,7 @@ class AvroSourceSpec extends AnyFunSuite {
       (4L, Some(java.sql.Date.valueOf("1970-01-01")), Some("0.00"))
     ).toDF("id", "d", "p_raw")
       .withColumn("p", col("p_raw").cast("decimal(12,2)")).drop("p_raw")
-    val path = "/root/repo/target/avro_cache/spec_datedec"
+    val path = SparkTestSession.tmpDir("spec_datedec").toString
     AvroIO.write(src, path)
     val back = spark.read.format("graft-avro").schema(src.schema)
       .load(path)
@@ -137,7 +137,7 @@ class AvroSourceSpec extends AnyFunSuite {
         Map("a" -> 1.0, "b" -> -2.5)),
       (2L, None, Seq.empty[Float], Seq(Some(7L)), Map.empty[String, Double])
     ).toDF("id", "info", "vec", "opts", "feats")
-    val path = "/root/repo/target/avro_cache/spec_nested"
+    val path = SparkTestSession.tmpDir("spec_nested").toString
     AvroIO.write(src, path)
     val back = spark.read.format("graft-avro").schema(src.schema)
       .load(path)
@@ -153,7 +153,7 @@ class AvroSourceSpec extends AnyFunSuite {
     // Avro maps are string-keyed by definition — int keys must reject
     val src = Seq((1L, Map(1 -> 1))).toDF("id", "m")
     val e = intercept[IllegalArgumentException] {
-      AvroIO.write(src, "/root/repo/target/avro_cache/spec_bad")
+      AvroIO.write(src, SparkTestSession.tmpDir("spec_bad").toString)
     }
     assert(e.getMessage.contains("graft-avro does not map"))
   }

@@ -176,7 +176,7 @@ class EmptyInputSpec extends AnyFunSuite {
       Seq.empty[String].toDF("s"), "s").count() === 0)
     // avro: writing an empty frame yields no files; a pinned-schema
     // read of the empty dir returns zero rows
-    val path = "/root/repo/target/avro_cache/spec_empty"
+    val path = SparkTestSession.tmpDir("spec_empty").toString
     graft.sources.AvroIO.write(emptyKV, path)
     assert(spark.read.format("graft-avro").schema(emptyKV.schema)
       .load(path).count() === 0)

@@ -69,8 +69,7 @@ class ExpressionsSpec extends AnyFunSuite {
     import s2.implicits._
     // must come from a real source: ConvertToLocalRelation folds
     // projections over Seq-backed frames before any optimizer rule runs
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "fuse_test")
+    val dir = SparkTestSession.tmpDir("fuse_test")
     Seq(Some(1.0), Some(Double.PositiveInfinity),
       Some(Double.NegativeInfinity), None).toDF("x")
       .write.mode("overwrite").parquet(dir.toString)

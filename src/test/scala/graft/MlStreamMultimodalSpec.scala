@@ -45,8 +45,7 @@ class MlStreamMultimodalSpec extends AnyFunSuite {
   }
 
   test("tumblingCounts over a staged stream equals the batch window agg") {
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "stream_test")
+    val dir = SparkTestSession.tmpDir("stream_test")
     val events = (0 until 200).map { i =>
       (i.toLong, new java.sql.Timestamp(1700000000000L + i * 60000L),
         s"t${i % 3}", i.toDouble)
@@ -106,7 +105,7 @@ class MlStreamMultimodalSpec extends AnyFunSuite {
 
   test("keyedParquetUpsert: batch 2 replaces overlapping keys, keeps " +
        "disjoint ones (MERGE, not append)") {
-    val path = "/root/repo/target/test_keyed_upsert"
+    val path = s"${SparkTestSession.tmpDir("upsert")}/test_keyed_upsert"
     StreamOps.dropUpsertTable(path)
     val sink = StreamOps.keyedParquetUpsert(spark, path, "k")
     sink(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), 0L)
@@ -132,8 +131,7 @@ class MlStreamMultimodalSpec extends AnyFunSuite {
   test("sessionizeStream emits the batch sessions minus each key's " +
        "open tail session") {
     import graft.ops.RelOps
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "sess_stream")
+    val dir = SparkTestSession.tmpDir("sess_stream")
     // user 1: events at 0s,10s,  gap  5000s,5040s,  gap  12000s (open)
     // user 2: single event (open tail only → nothing emitted)
     val raw = Seq(
@@ -156,8 +154,7 @@ class MlStreamMultimodalSpec extends AnyFunSuite {
 
   test("sessionizeStream folds consecutive cross-batch stragglers into " +
        "ONE closed session, not singletons") {
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "sess_strag")
+    val dir = SparkTestSession.tmpDir("sess_strag")
     def ts(sec: Long) = new java.sql.Timestamp(1700000000000L + sec * 1000L)
     // batch 1 opens a session at t=10000; batch 2 delivers two
     // stragglers at t=0 and t=100 — both far before open.start − gap,
@@ -185,8 +182,7 @@ class MlStreamMultimodalSpec extends AnyFunSuite {
   }
 
   test("slidingCounts over a staged stream equals the batch sliding agg") {
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "slide_test")
+    val dir = SparkTestSession.tmpDir("slide_test")
     val events = (0 until 120).map { i =>
       (i.toLong, new java.sql.Timestamp(1700000000000L + i * 60000L),
         s"t${i % 2}", i.toDouble)
@@ -207,8 +203,7 @@ class MlStreamMultimodalSpec extends AnyFunSuite {
   }
 
   test("dedupStream drops duplicate keys within the watermark horizon") {
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "dedup_stream")
+    val dir = SparkTestSession.tmpDir("dedup_stream")
     // 50 logical events, each duplicated 3× — with RE-STAMPED
     // timestamps (i/50 varies), as a retransmission would arrive
     val events = (0 until 150).map { i =>
@@ -231,8 +226,7 @@ class MlStreamMultimodalSpec extends AnyFunSuite {
     val df = blobs
     val model = IdsPipeline.fitOnArray(df, "embedding", "label_s",
       IdsPipeline.DT)
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "score_stream")
+    val dir = SparkTestSession.tmpDir("score_stream")
     df.write.mode("overwrite").parquet(dir.toString)
     val prepared = IdsPipeline.withArrayFeatures(
       StreamOps.fileStream(spark, df.schema, dir.toString), "embedding")

@@ -15,8 +15,7 @@ class PhysicalLayoutSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("hive-style partitioned write + filter → partition pruning") {
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "part_prune").toString
+    val dir = SparkTestSession.tmpDir("part_prune").toString
     val events = Tables.load(spark, "/root/testdata/sf0.001", "events")
     events.write.mode("overwrite").partitionBy("event_type").parquet(dir)
 
@@ -38,7 +37,7 @@ class PhysicalLayoutSpec extends AnyFunSuite {
     // the in-memory catalog forgets tables between JVMs but their
     // warehouse directories persist → LOCATION_ALREADY_EXISTS
     for (t <- Seq("b_orders", "b_customer")) {
-      val p = java.nio.file.Paths.get(s"/root/repo/target/warehouse/$t")
+      val p = java.nio.file.Paths.get(s"target/warehouse/$t")
       if (java.nio.file.Files.exists(p)) {
         import scala.jdk.CollectionConverters._
         java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
@@ -86,8 +85,8 @@ class PhysicalLayoutSpec extends AnyFunSuite {
     val ev = Tables.load(spark, "/root/testdata/sf0.001", "events")
       .select(pmod(col("user_id"), lit(65536L)).as("da"),
         pmod(col("event_id"), lit(65536L)).as("db"), col("value"))
-    val zDir = "/root/repo/target/zorder_cache/spec_z"
-    val hDir = "/root/repo/target/zorder_cache/spec_hash"
+    val zDir = SparkTestSession.tmpDir("spec_z").toString
+    val hDir = SparkTestSession.tmpDir("spec_hash").toString
     // same rows, two layouts: along the z-curve vs hash-scattered
     LayoutOps.zOrderLayout(ev, col("da"), col("db"), 16)
       .write.mode("overwrite").parquet(zDir)
@@ -138,8 +137,8 @@ class PhysicalLayoutSpec extends AnyFunSuite {
     val ev = Tables.load(spark, "/root/testdata/sf0.001", "events")
       .select(pmod(col("user_id"), lit(65536L)).as("da"),
         pmod(col("event_id"), lit(65536L)).as("db"), col("value"))
-    val hDir = "/root/repo/target/zorder_cache/spec_hilbert"
-    val rDir = "/root/repo/target/zorder_cache/spec_hash2"
+    val hDir = SparkTestSession.tmpDir("spec_hilbert").toString
+    val rDir = SparkTestSession.tmpDir("spec_hash2").toString
     LayoutOps.hilbertLayout(ev, col("da"), col("db"), 16, 16)
       .write.mode("overwrite").parquet(hDir)
     ev.repartition(16).write.mode("overwrite").parquet(rDir)
@@ -256,8 +255,8 @@ class PhysicalLayoutSpec extends AnyFunSuite {
       .select(col("o_orderkey"),
         to_date(col("o_orderdate")).as("o_orderdate"),
         col("o_totalprice"))
-    val rDir = "/root/repo/target/range_cache/spec_range"
-    val hDir = "/root/repo/target/range_cache/spec_hash"
+    val rDir = SparkTestSession.tmpDir("spec_range").toString
+    val hDir = SparkTestSession.tmpDir("spec_hash").toString
     LayoutOps.rangeLayout(o, col("o_orderdate"), 16, col("o_orderkey"))
       .write.mode("overwrite").parquet(rDir)
     o.repartition(16).write.mode("overwrite").parquet(hDir)

@@ -160,8 +160,7 @@ class Round14OpsSpec extends AnyFunSuite {
       "bytes", 6L).collect()
     assert(plan.count(_.getAs[String]("part") == "p1") === 2)
     assert(plan.count(_.getAs[String]("part") == "p2") === 1)
-    val out = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("/root/repo/target"), "compact")
+    val out = SparkTestSession.tmpDir("compact")
       .toString + "/t"
     LayoutOps.executeCompaction(rows, asg, "part", "file_id", out)
     // one parquet part file per (part, bin) directory

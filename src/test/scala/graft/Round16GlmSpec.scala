@@ -91,6 +91,26 @@ class Round16GlmSpec extends AnyFunSuite {
     assert(out.map(_.getLong(0)).toSet == Set(0L, 1L, 7L))
   }
 
+  test("each logisticOvrBetas class replays logisticIrls on its " +
+       "one-vs-rest labels bit for bit") {
+    // the fused K-class loop must be K independent binary fits: same
+    // projection, Gram, score and Cramer step per class
+    val labels = Seq(0L, 1L, 2L)
+    val ovr = EvalOps.logisticOvrBetas(ovrFixture, "x1", "x2", "lab",
+        labels, iters = 4).collect()
+      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
+      .toMap
+    assert(ovr.keySet == labels.toSet)
+    assert(ovr.values.exists(_ != ((0L, 0L, 0L))), s"trivial fit $ovr")
+    labels.foreach { k =>
+      val one = EvalOps.logisticIrls(
+        ovrFixture.withColumn("y", col("lab") === k), "x1", "x2", "y",
+        iters = 4).collect().head
+      assert(ovr(k) == ((one.getLong(1), one.getLong(2), one.getLong(3))),
+        s"class $k")
+    }
+  }
+
   private def plattFixture = {
     // monotone link from score to outcome with deterministic noise:
     // flip every 10th row so the problem is not perfectly separable

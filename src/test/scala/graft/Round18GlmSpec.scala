@@ -96,7 +96,7 @@ class Round18GlmSpec extends AnyFunSuite {
   test("saveGlmBetasD/loadGlmBetasD: bit-exact tidy round trip; a " +
        "wrong label domain, a wrong width, and stale provenance all " +
        "fail LOUDLY") {
-    val path = "/root/repo/target/fit_artifacts/spec_beta_d3"
+    val path = SparkTestSession.tmpDir("spec_beta_d3").toString
     val labels = Seq(0L, 1L, 2L)
     val betas = Array(Array(1L, -2L, 3L, 9L), Array(0L, 5L, -6L, 2L),
       Array(7L, 8L, -9L, -1L))

@@ -50,8 +50,7 @@ class StreamSemanticsSpec extends AnyFunSuite {
   private def stage(batches: Seq[Seq[(Long, String)]]): String = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     import spark.implicits._
-    val dirP = Files.createTempDirectory(
-      Paths.get("/root/repo/target"), "wm_sem")
+    val dirP = SparkTestSession.tmpDir("wm_sem")
     batches.zipWithIndex.foreach { case (rows, i) =>
       val tmp = s"$dirP/_tmp$i"
       rows.toDF("event_id", "tss")

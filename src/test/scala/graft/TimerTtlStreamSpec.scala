@@ -32,9 +32,7 @@ class TimerTtlStreamSpec extends AnyFunSuite {
   /** Stage each frame as one parquet file; name + modtime pin replay
     * order. Returns the directory to stream from. */
   private def stageBatches(tag: String, batches: Seq[DataFrame]): String = {
-    val dir = Paths.get(s"/root/repo/target/stream_src/spec_$tag")
-    Files.createDirectories(dir)
-    Files.list(dir).forEach(Files.deleteIfExists(_))
+    val dir = SparkTestSession.tmpDir(s"spec_$tag")
     batches.zipWithIndex.foreach { case (df, i) =>
       val tmp = s"$dir/_tmp$i"
       df.coalesce(1).write.mode("overwrite").parquet(tmp)

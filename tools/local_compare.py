@@ -7,6 +7,10 @@ For each query dumped by graft.Verify: load the Spark parquet result,
 run the oracle SQL in DuckDB over the same fixture tables, sort columns
 by name + rows by all columns, and hash-compare values (mirrors the
 driver's CORRECTNESS_r{N}.json procedure as described in VERDICT.md).
+
+Also writes <verifyOutDir>/hashes.json: each query's canonical Spark
+frame hash (`canon` + `frame_hash`, oracle or not), so two dumps of the
+same fixture compare with `diff a/hashes.json b/hashes.json`.
 """
 import json
 import sys
@@ -48,6 +52,7 @@ def main(sf_dir: str, out_dir: str) -> None:
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = n_noora = 0
+    hashes = {}
     import glob
     names = sorted(p.split("/")[-1] for p in glob.glob(f"{out_dir}/q*"))
     for name in names:
@@ -57,6 +62,7 @@ def main(sf_dir: str, out_dir: str) -> None:
             print(f"FAIL {name}: spark read: {e}")
             n_fail += 1
             continue
+        hashes[name] = frame_hash(canon(spark_df))
         if name not in oracle:
             print(f"  -- {name}: no_oracle ({len(spark_df)} rows)")
             n_noora += 1
@@ -84,6 +90,9 @@ def main(sf_dir: str, out_dir: str) -> None:
                 print(a[bad].head(3))
                 print(b[bad].head(3))
             n_fail += 1
+    with open(f"{out_dir}/hashes.json", "w") as f:
+        json.dump(hashes, f, indent=1, sort_keys=True)
+        f.write("\n")
     print(f"\n{n_pass} pass, {n_fail} fail, {n_noora} no_oracle")
 
 
