@@ -1,10 +1,7 @@
 package graft
 
-import org.apache.spark.ml.Pipeline
-import org.apache.spark.ml.feature.{MinMaxScaler, StringIndexer, VectorAssembler}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** ML WALL-TIME BASELINE BENCH (round-12 verdict task 1): the only
   * benchmark numbers the reference actually PUBLISHES are ML
@@ -22,11 +19,14 @@ import org.apache.spark.storage.StorageLevel
   *
   * Phases reported separately in the one-line JSON:
   *  - `clean_sec`   — sentinel probe + ∞-replace + median impute +
-  *                    stratified 80/20 anti-join split (library ops,
-  *                    `IdsPipeline.runEndToEnd` steps 1-3);
+  *                    stratified 80/20 anti-join split
+  *                    (`IdsPipeline.train` steps 1-4), of which
+  *                    `clean_probe_sec` is the probe and
+  *                    `clean_stage_sec` the imputed table's staging;
   *  - `prep_sec`    — assembler + MinMax scaler + frequency label
-  *                    index, fit on train, applied to both splits,
-  *                    persisted (the notebook's untimed feature cells);
+  *                    index, fit on the whole cleaned table, applied
+  *                    to both splits, persisted (`IdsPipeline.train`
+  *                    steps 5-6: the notebook's untimed feature cells);
   *  - per-algo sec  — classifier fit + transform + accuracy agg (the
   *                    published cells' region).
   *
@@ -104,96 +104,22 @@ object BenchMl {
     val algos = sys.env.getOrElse("SPARK_GRAFT_ML_ALGOS", "DT,NB,RF,MLP")
       .split(",").map(_.trim).filter(_.nonEmpty)
     val spark = GraftSession.build(cpus)
-    import graft.ops.{CleanOps, SplitOps}
 
-    val featureCols = (0 until 78).map(i => s"f$i")
-    val flows = spark.read.parquet(fixture(spark, rows, cpus))
+    // ---- clean + split + feature prep: IdsPipeline.train (untimed by
+    // the reference's cells but reported here for completeness); each
+    // classifier then reads the persisted prepared features, matching
+    // the reference, whose %%time cells read an already-prepared
+    // DataFrame ----
+    val run = ids.train(spark.read.parquet(fixture(spark, rows, cpus)),
+      (0 until 78).map(i => s"f$i"), "label", "row_id", 0.2, 42L,
+      s"target/ml_cleaned_$rows")
+    val labelNames = run.labels
 
-    // ---- clean + split (runEndToEnd steps 1-3, untimed by the
-    // reference's cells but reported here for completeness). Unlike
-    // the tiny-fixture runEndToEnd, the 80-wide 1M-row table needs
-    // plan hygiene: the per-column screens are fused into ONE
-    // projection (a 156-deep withColumn fold builds an expression
-    // tree Catalyst re-walks per ML stage — measured minutes of pure
-    // driver-side analysis), and the cleaned table is STAGED to
-    // parquet so the split and every classifier read a flat scan —
-    // exactly how a production pipeline lands its silver table. ----
-    val t0 = System.nanoTime()
-    def nanNulled(c: String) =
-      when(isnan(col(c)), lit(null).cast("double")).otherwise(col(c))
-    val ceilings = flows.select(featureCols.map(c =>
-      max(CleanOps.replaceInf(nanNulled(c), lit(-100.0))).as(c)): _*)
-      .head()
-    val probeSec = (System.nanoTime() - t0) / 1e9
-    val definite = flows.select(
-      col("row_id") +: featureCols.zipWithIndex.map { case (c, i) =>
-        (if (ceilings.isNullAt(i)) nanNulled(c)
-         else CleanOps.replaceInf(nanNulled(c),
-           lit(ceilings.getDouble(i)))).as(c)
-      } :+ col("label"): _*)
-    val tMed = System.nanoTime()
-    // medianFillApprox runs one approx-quantile pass over the 78
-    // columns (its own job), then the screened+imputed projection is
-    // staged to parquet — the write materializes the whole clean plan
-    val cleanedPath = s"target/ml_cleaned_$rows"
-    CleanOps.medianFillApprox(definite, featureCols)
-      .write.mode("overwrite").parquet(cleanedPath)
-    val stageSec = (System.nanoTime() - tMed) / 1e9
-    val cleaned = spark.read.parquet(cleanedPath)
-    val (train, valid) = SplitOps.antiJoinSplit(
-      cleaned, "row_id", "label", 0.2, 42L)
-    val cleanSec = (System.nanoTime() - t0) / 1e9
-
-    // ---- feature prep (the notebook's untimed assembler cells):
-    // fit on train, apply to both, persist so each classifier sees
-    // materialized features — matching the reference, whose %%time
-    // cells read an already-prepared DataFrame ----
-    val t1 = System.nanoTime()
-    val assembler = new VectorAssembler()
-      .setInputCols(featureCols.toArray).setOutputCol("features_raw")
-      .setHandleInvalid("skip")
-    val scaler = new MinMaxScaler()
-      .setInputCol("features_raw").setOutputCol("features")
-    val indexer = new StringIndexer()
-      .setInputCol("label").setOutputCol("encoded_label")
-      .setStringOrderType("frequencyDesc").setHandleInvalid("skip")
-    // fit on the FULL cleaned table, the reference notebook's own
-    // convention (it scales the assembled df before splitting) — also
-    // what keeps valid-split features inside [0,1], which NaiveBayes
-    // requires (a train-fitted scaler leaves valid rows epsilon
-    // outside the range)
-    val prep = new Pipeline()
-      .setStages(Array(assembler, scaler, indexer)).fit(cleaned)
-    val trainP = prep.transform(train)
-      .select("features", "encoded_label")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val validP = prep.transform(valid)
-      .select("features", "encoded_label")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nTrain = trainP.count()
-    val nValid = validP.count()
-    val prepSec = (System.nanoTime() - t1) / 1e9
-
-    // index → original label name, for the per-label metric keys
-    // (frequencyDesc order, so index 0 is the majority class — the
-    // reference's "label 0")
-    val labelNames = prep.stages(2)
-      .asInstanceOf[org.apache.spark.ml.feature.StringIndexerModel]
-      .labelsArray(0)
-
-    // ---- per-algo classifier fit + score + accuracy (the published
-    // cells' region; reference MLP hidden layers = [4, 2]).
-    // Per-label precision/recall (the last reference-published
-    // numbers with no engine-side measurement, BASELINE.md label-0
-    // rows) come from ONE O(C²) confusion aggregate per algo —
-    // outside the timed region, like the notebook's evaluator
-    // cells. ----
     val results = algos.map { name =>
-      val clf = ids.classifier(algoOf(name), trainP, "encoded_label",
-        78, Seq(4, 2))
+      val clf = run.classifier(algoOf(name), Seq(4, 2))
       val t = System.nanoTime()
-      val model = clf.fit(trainP)
-      val scored = model.transform(validP)
+      val model = clf.fit(run.trainFeatures)
+      val scored = model.transform(run.validFeatures)
       val acc = scored.agg(
           avg(when(col("prediction") === col("encoded_label"), 1.0)
             .otherwise(0.0)))
@@ -232,12 +158,14 @@ object BenchMl {
           "%.4f", Double.box(s / baselineColabSec(n)))},""" +
         s""""by_label":{$labelsJson}}"""
     }.mkString(",")
+    val cleanMs = run.probeMs + run.imputeMs + run.splitMs
     val json = s"""{"metric":"ml_train_score","rows":$rows,""" +
-      s""""n_features":78,"n_train":$nTrain,"n_valid":$nValid,""" +
-      s""""cpus":$cpus,"clean_sec":${d3(cleanSec)},""" +
-      s""""clean_probe_sec":${d3(probeSec)},""" +
-      s""""clean_stage_sec":${d3(stageSec)},""" +
-      s""""prep_sec":${d3(prepSec)},"algos":{$algoJson}}"""
+      s""""n_features":78,"n_train":${run.nTrain},""" +
+      s""""n_valid":${run.nValid},"cpus":$cpus,""" +
+      s""""clean_sec":${d3(cleanMs / 1e3)},""" +
+      s""""clean_probe_sec":${d3(run.probeMs / 1e3)},""" +
+      s""""clean_stage_sec":${d3(run.imputeMs / 1e3)},""" +
+      s""""prep_sec":${d3(run.prepMs / 1e3)},"algos":{$algoJson}}"""
     println(json)
     sys.env.get("SPARK_GRAFT_ML_OUT").foreach { p =>
       java.nio.file.Files.write(java.nio.file.Paths.get(p),

@@ -137,18 +137,6 @@ object AggOps {
         Window.orderBy(col("count").desc, col(c))) - 1)
   }
 
-  /** Global distinct values of a column (A6). */
-  def distinctValues(df: DataFrame, c: String): DataFrame =
-    df.select(col(c)).distinct()
-
-  /** Exact interpolated percentiles of `valueCol` per group. At scale,
-    * swap `percentile` → `percentile_approx` (single-pass sketch). */
-  def percentilesByGroup(df: DataFrame, groupCols: Seq[String],
-                         valueCol: String, ps: Seq[Double]): DataFrame =
-    df.groupBy(groupCols.map(col): _*)
-      .agg(expr(
-        s"percentile($valueCol, array(${ps.mkString(",")}))").as("pct"))
-
   /** Fixed-width histogram: bucket = floor((v − lo)/step) with count
     * and observed min/max per bucket. One hash aggregate — the bucket
     * expression keys the shuffle, so at 100 TB this is one scan + one

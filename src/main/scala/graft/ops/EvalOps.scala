@@ -864,17 +864,17 @@ object EvalOps {
     terms.agg(count(lit(1)).as("k_strata"), sum(col("_n")).as("n"),
         sum(col("_a")).as("sum_a"), sum(col("_r")).as("_sr"),
         sum(col("_sterm")).as("_ss"), sum(col("_e")).as("_se"),
-        sum(col("_v")).as("_sv"))
+        sum(col("_v")).as("_vsum"))
       .select(col("k_strata"), col("n"), col("sum_a"),
         when(col("_ss") > 0, round(col("_sr").cast("double") /
           col("_ss").cast("double") * 1e6).cast("long"))
           .as("or_mh_micro"),
-        when(col("_sv") > 0,
+        when(col("_vsum") > 0,
           round((col("sum_a").cast("double") -
             col("_se").cast("double") / 1e6) *
             (col("sum_a").cast("double") -
               col("_se").cast("double") / 1e6) /
-            (col("_sv").cast("double") / 1e6) * 1e6).cast("long"))
+            (col("_vsum").cast("double") / 1e6) * 1e6).cast("long"))
           .as("chi2_micro"))
   }
 
@@ -1491,18 +1491,18 @@ object EvalOps {
       sum(when(!col("_a") && col("_e"), 1L).otherwise(0L))
         .as("events_b"))
     val sums = terms.agg(sum(col("_da")).as("_oa"),
-      sum(col("_e6")).as("_se"), sum(col("_v6")).as("_sv"))
+      sum(col("_e6")).as("_se"), sum(col("_v6")).as("_vsum"))
     tot.crossJoin(broadcast(sums))
       .select(col("n_a"), col("n_b"), col("events_a"),
         col("events_b"),
         (col("_oa") * lit(1000000L) - col("_se"))
           .as("o_minus_e_micro"),
-        when(col("_sv") > 0,
+        when(col("_vsum") > 0,
           round((col("_oa").cast("double") -
             col("_se").cast("double") / 1e6) *
             (col("_oa").cast("double") -
               col("_se").cast("double") / 1e6) /
-            (col("_sv").cast("double") / 1e6) * 1e6).cast("long"))
+            (col("_vsum").cast("double") / 1e6) * 1e6).cast("long"))
           .as("chi2_micro"))
   }
 
@@ -1868,16 +1868,21 @@ object EvalOps {
     * Gamma): β₀ = ln((Σy+1)/n). Newton from 0 overshoots
     * catastrophically on large counts (Δβ₀ ≈ ȳ−1); the standard null
     * init puts step 1 in the quadratic zone. The +1 keeps the ln
-    * argument positive; empty input seeds 0. */
-  private def nullSeed(base: DataFrame): DataFrame =
-    base.agg(sum(col("_c")).as("_n"),
-        sum(col("_c") * col("_y")).as("_sy"))
-      .select(
+    * argument positive; empty input seeds 0. Reads the `_n`/`_sy`
+    * columns of a [[seedSums]] frame. */
+  private def nullSeed(sums: DataFrame): DataFrame =
+    sums.select(
         when(col("_n") > 0, round(log(
           (col("_sy") + 1).cast("double") / col("_n").cast("double"))
           * 1e6, 0).cast("long")).otherwise(0L).as("b0_micro"),
         lit(0L).as("b1_micro"), lit(0L).as("b2_micro"))
       .localCheckpoint()
+
+  /** One aggregate of the [[nullSeed]] sums (n = Σ_c, Σ_c·y) and any
+    * `more` sums over the same base. */
+  private def seedSums(base: DataFrame, more: Column*): DataFrame =
+    base.agg(sum(col("_c")).as("_n"),
+      sum(col("_c") * col("_y")).as("_sy") +: more: _*)
 
   /** The 3×3 weighted Gram XᵀWX of fit `k`: the six sums a00..a22
     * (suffixed k) of _c·_w<k>·x_r·x_c over the per-row level count
@@ -2019,7 +2024,7 @@ object EvalOps {
       .withColumn("_sc", col("_y") * lit(1000000000L) - col("_mu"))
 
   private def poissonNewton(base: DataFrame, iters: Int): DataFrame =
-    newtonLoop(base, iters, poissonMuFrame, nullSeed(base))
+    newtonLoop(base, iters, poissonMuFrame, nullSeed(seedSums(base)))
 
   /** The (x₁, x₂, y) long base of the count fits, with the constant
     * level weight _c ≡ 1 — NOT [[levelled]]: a count GLM's input is
@@ -2113,7 +2118,8 @@ object EvalOps {
         .withColumn("_sc", round((col("_y") * lit(1000000000L) -
           col("_mu")).cast("double") * lit(1e6) /
           col("_v").cast("double")).cast("long"))
-    countReadout(base, newtonLoop(base, iters, nbFrame, nullSeed(base)))
+    countReadout(base,
+      newtonLoop(base, iters, nbFrame, nullSeed(seedSums(base))))
   }
 
   /** GAMMA GLM with LOG LINK (McCullagh & Nelder 1989 §8.3 — the
@@ -2146,8 +2152,9 @@ object EvalOps {
                 yCol: String, iters: Int): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val base = countBase(df, x1Col, x2Col, yCol)
-    // the log-link Gamma information is beta-free: pay it ONCE
-    val info = base.agg(count(lit(1)).as("a00"),
+    // the log-link Gamma information is beta-free: pay it ONCE, in
+    // the same aggregate as the null seed's sums
+    val info = seedSums(base, count(lit(1)).as("a00"),
         sum(col("_x1")).as("a01"), sum(col("_x2")).as("a02"),
         sum(col("_x1") * col("_x1")).as("a11"),
         sum(col("_x1") * col("_x2")).as("a12"),
@@ -2159,7 +2166,7 @@ object EvalOps {
           (col("_y") * lit(1000000000L)).cast("double") /
           col("_mu").cast("double")).cast("long") - lit(1000000L))
     countReadout(base, newtonLoop(base, iters, gammaFrame,
-      nullSeed(base), info = Some(info)))
+      nullSeed(info), info = Some(info)))
   }
 
   /** TWO-SAMPLE KOLMOGOROV–SMIRNOV TEST (Kolmogorov 1933; Smirnov

@@ -43,11 +43,15 @@ class IdsEndToEndSpec extends AnyFunSuite {
   private val features = Seq("fwd_pkts", "bwd_pkts", "flow_byts_s",
     "flow_pkts_s", "flow_duration")
 
+  // one train call and one tree for every case: the steps are seeded,
+  // so the same call would give the same run
+  private lazy val run = IdsPipeline.train(flows, features, "label",
+    "row_id", validFraction = 0.2, seed = 7L,
+    stageDir = SparkTestSession.tmpDir("ids_e2e").toString)
+  private lazy val dt = run.classifier(IdsPipeline.DT).fit(run.trainFeatures)
+
   test("end-to-end: dirty flows → cleaned → trained DT → accuracy > 0.9") {
-    val (metrics, model) = IdsPipeline.runEndToEnd(
-      flows, features, "label", "row_id",
-      validFraction = 0.2, seed = 7L, algo = IdsPipeline.DT)
-    val rows = metrics.collect()
+    val rows = run.metrics(dt).collect()
     assert(rows.length === 3, "one metric row per class")
     val acc = rows.head.getDouble(rows.head.fieldIndex("accuracy"))
     assert(acc > 0.9, s"accuracy $acc")
@@ -56,16 +60,13 @@ class IdsEndToEndSpec extends AnyFunSuite {
       assert(r.getDouble(r.fieldIndex("recall")) > 0.8)
     }
     // the fitted model scores new data (streaming-safe transform)
-    val scored = model.transform(flows.na.fill(0.0, features)
+    val scored = run.serveModel(dt).transform(flows.na.fill(0.0, features)
       .select((features.map(col) :+ col("label")): _*))
     assert(scored.columns.contains("prediction"))
   }
 
   test("confusion matrix of a good model is diagonal-dominant") {
-    val (_, model) = IdsPipeline.runEndToEnd(
-      flows, features, "label", "row_id",
-      validFraction = 0.2, seed = 7L, algo = IdsPipeline.DT)
-    val scored = model.transform(
+    val scored = run.serveModel(dt).transform(
       graft.ops.CleanOps.medianFillApprox(
         flows.withColumn("flow_pkts_s",
           graft.ops.CleanOps.replaceInf(col("flow_pkts_s"), lit(0.0))),
@@ -77,6 +78,19 @@ class IdsEndToEndSpec extends AnyFunSuite {
       val offSum = (1 until rows.length + 1)
         .filter(_ != i + 1).map(r.getLong).sum
       assert(diag > offSum, s"class $i diag $diag vs off $offSum")
+    }
+  }
+
+  // NaiveBayes rejects negative features: a scaler fit on the train
+  // split alone leaves valid rows just below 0, so this case pins the
+  // scaler to the whole cleaned table
+  test("NB and MLP score the valid split: the scaler sees every row") {
+    for (algo <- Seq(IdsPipeline.NB, IdsPipeline.MLP)) {
+      val model = run.classifier(algo).fit(run.trainFeatures)
+      val rows = run.metrics(model).collect()
+      assert(rows.length === 3, s"$algo: one metric row per class")
+      assert(rows.map(r => r.getLong(r.fieldIndex("support"))).sum ===
+        run.nValid, s"$algo: every valid row scored")
     }
   }
 }

@@ -14,9 +14,21 @@ object SparkTestSession {
   lazy val spark: SparkSession = GraftSession.build(4,
     scratch = Some("target"), logLevel = "ERROR")
 
-  /** A fresh directory under target/ for one spec's files. */
-  def tmpDir(tag: String): Path =
-    Files.createTempDirectory(Paths.get("target").toAbsolutePath, tag)
+  /** Every [[tmpDir]] of this JVM, deleted when it exits (one failed
+    * delete does not keep the others). */
+  private val tmpDirs =
+    new java.util.concurrent.ConcurrentLinkedQueue[Path]()
+  sys.addShutdownHook(
+    tmpDirs.forEach(d => scala.util.Try(Fs.deleteRecursively(d))))
+
+  /** A fresh directory under target/ for one spec's files, deleted
+    * when the test JVM exits. */
+  def tmpDir(tag: String): Path = {
+    val dir = Files.createTempDirectory(
+      Paths.get("target").toAbsolutePath, tag)
+    tmpDirs.add(dir)
+    dir
+  }
 
   /** Stage per-batch single-file parquets with increasing modtimes so
     * maxFilesPerTrigger=1 replays them in order (q275's staging). */
