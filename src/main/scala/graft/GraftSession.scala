@@ -63,14 +63,11 @@ object GraftSession {
     * clamped to [1 MB, 64 MB]: at fixture scale this floors at 1 MB
     * (full parallelism for CPU-bound stages); at production scale the
     * same formula hits the 64 MB ceiling, i.e. Spark's own default —
-    * never a constant tuned for either. Overridable via
-    * SPARK_GRAFT_ADVISORY_BYTES. */
+    * never a constant tuned for either. */
   def advisoryBytes(inputDir: String, cpus: Int): Long = {
     val inputBytes = Option(new java.io.File(inputDir).listFiles())
       .map(_.filter(_.isFile).map(_.length).sum).getOrElse(0L)
-    sys.env.get("SPARK_GRAFT_ADVISORY_BYTES").map(_.toLong)
-      .getOrElse(math.min(64L << 20,
-        math.max(1L << 20, inputBytes / (cpus.toLong * 8))))
+    math.min(64L << 20, math.max(1L << 20, inputBytes / (cpus.toLong * 8)))
   }
 
   /** All of `SparkEntry.queries`, or only the comma-separated names in

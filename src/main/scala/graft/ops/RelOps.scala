@@ -418,94 +418,65 @@ object RelOps {
           .otherwise(lit("possible")))
   }
 
+  /** The SCD2 tombstone flag: `deletedCol` cast to boolean with null
+    * reading false; `None` is an all-false column (a live-only log).
+    * Shared by [[scd2Build]], [[scd2Apply]] and
+    * [[graft.streaming.StreamOps.scd2Stream]]. */
+  private[graft] def deletedFlag(deletedCol: Option[String]): Column =
+    deletedCol.fold(lit(false))(c =>
+      coalesce(col(c).cast("boolean"), lit(false)))
+
   /** SCD TYPE-2 HISTORY BUILD (the slowly-changing-dimension
     * effective-dating pass every warehouse runs on entity change
     * logs; the library generalization of q107's inline compaction —
     * adds version ranks, is_current, epoch-micro bounds, and the
     * positional null-run guard): per key, order the log by
-    * (ts, tie), SUPPRESS no-op
-    * changes (a new version opens only when the tracked attribute
-    * actually changes — null-safe comparison), then close each
-    * version with the next change's timestamp: valid_from = its ts,
-    * valid_to = lead(ts) (null ⇒ is_current), version = the change's
-    * rank. Validity bounds are returned as integer epoch
-    * MICROSECONDS (`unix_micros`) so the history is engine-portable
-    * with zero timestamp-format risk.
+    * (ts, tie), SUPPRESS no-op changes (a new version opens only when
+    * a tracked attribute actually changes), then close each version
+    * with the next change's timestamp: valid_from = its ts, valid_to
+    * = lead(ts) (null ⇒ is_current), version = the change's rank.
+    * Validity bounds are returned as integer epoch MICROSECONDS
+    * (`unix_micros`) so the history is engine-portable with zero
+    * timestamp-format risk.
     *
-    * SCALE: both windows share the (key) partitioning and the
+    * The change screen compares the WHOLE (attrs..., deleted) STRUCT
+    * with the null-safe `<=>` (q126's whole-struct trick): struct
+    * equality treats per-field null==null as equal, so the composite
+    * rule is exactly `OR` over per-field `IS DISTINCT FROM` — one
+    * comparison, no per-column lag columns.
+    *
+    * TOMBSTONES (`deletedCol`; `None` and null flags read false —
+    * real change streams carry deletes, and a build that ignores
+    * them leaves a deleted entity "current" forever). Pinned
+    * semantics, which the oracle replays field for field:
+    *  - a tombstone CLOSES the key's open version at its ts and opens
+    *    nothing; a later change row re-opens the key, and after a
+    *    terminal tombstone the key has NO current row;
+    *  - repeated tombstones collapse to one; delete → re-add of the
+    *    SAME value re-opens (the flag differs on both transitions);
+    *  - `valid_to_us` = lead(ts) over the SCREENED rows;
+    *  - tombstone rows emit no version; `version` numbers LIVE
+    *    versions only (row_number over the filtered set), and a
+    *    leading tombstone emits nothing.
+    *
+    * SCALE: every window shares the (key) partitioning and the
     * (ts, tie) sort, so the whole build is ONE hash exchange + one
-    * sort reused by the lag screen and the lead/rank pass — never a
-    * global sort; per-key history lengths bound the window frames.
-    * The as-of lookup against the built history is [[asofJoin]]. */
-  def scd2Build(changes: DataFrame, keyCol: String, attrCol: String,
-                tsCol: String, tieCol: String): DataFrame =
-    scd2Build(changes, keyCol, Seq(attrCol), tsCol, tieCol)
-
-  /** Multi-attribute [[scd2Build]] — real dimension builds track MANY
-    * columns, and a version must open when ANY of them changes. The
-    * change screen compares the WHOLE tracked-attribute STRUCT with
-    * the null-safe `<=>` (q126's whole-struct trick): struct equality
-    * treats per-field null==null as equal, so the composite rule is
-    * exactly `OR` over per-field `IS DISTINCT FROM` — one comparison,
-    * no per-column lag columns. Same positional first-row guard, same
-    * single (key) exchange + (ts, tie) sort shared by both windows. */
+    * sort — never a global sort; per-key history lengths bound the
+    * window frames. The as-of lookup against the built history is
+    * [[asofJoin]]. */
   def scd2Build(changes: DataFrame, keyCol: String,
-                attrCols: Seq[String], tsCol: String,
-                tieCol: String): DataFrame = {
+                attrCols: Seq[String], tsCol: String, tieCol: String,
+                deletedCol: Option[String] = None): DataFrame = {
     require(attrCols.nonEmpty, "scd2Build needs >= 1 tracked attribute")
     val w = Window.partitionBy(col(keyCol))
       .orderBy(col(tsCol), col(tieCol))
-    val attrs = struct(attrCols.map(col): _*)
-    changes
-      // first-row detection must be positional, NOT `_prev IS NULL`:
-      // a null previous ATTRIBUTE would then re-open a version on
-      // every consecutive null (the null-safe <=> handles the rest)
-      .withColumn("_rn", row_number().over(w))
-      .withColumn("_prev", lag(attrs, 1).over(w))
-      .filter(col("_rn") === 1 || !(col("_prev") <=> attrs))
-      .withColumn("valid_from_us", unix_micros(col(tsCol)))
-      .withColumn("valid_to_us",
-        unix_micros(lead(col(tsCol), 1).over(w)))
-      .withColumn("version", row_number().over(w).cast("long"))
-      .withColumn("is_current", col("valid_to_us").isNull)
-      .select(col(keyCol) +: attrCols.map(col) :+
-        col("valid_from_us") :+ col("valid_to_us") :+
-        col("version") :+ col("is_current"): _*)
-  }
-
-  /** [[scd2Build]] over a CDC change log WITH TOMBSTONES (round-12
-    * extension — real change streams carry deletes, and an SCD2 build
-    * that ignores them leaves a deleted entity "current" forever): a
-    * row whose `deletedCol` is true CLOSES the key's open version at
-    * its ts and opens nothing; a later change row re-opens the key.
-    * After a terminal tombstone the key has NO current row — the
-    * soft-delete a warehouse dimension actually wants.
-    *
-    * Pinned semantics (the oracle replays them field for field):
-    *  - the change screen compares (attrs..., deleted) — consecutive
-    *    identical live rows suppress as in [[scd2Build]]; repeated
-    *    tombstones collapse to one; delete → re-add of the SAME value
-    *    re-opens (the deleted flag differs on both transitions);
-    *  - `valid_to_us` = lead(ts) over the SCREENED rows, so a live
-    *    version followed by a tombstone closes at the tombstone's ts;
-    *  - tombstone rows emit no version; `version` numbers LIVE
-    *    versions only (row_number over the filtered set);
-    *  - a leading tombstone (delete before any add) emits nothing;
-    *  - null `deletedCol` reads as false.
-    *
-    * Same scale shape as [[scd2Build]]: one (key) hash exchange +
-    * one (ts, tie) sort shared by every window. */
-  def scd2BuildWithDeletes(changes: DataFrame, keyCol: String,
-                           attrCols: Seq[String], tsCol: String,
-                           tieCol: String,
-                           deletedCol: String): DataFrame = {
-    require(attrCols.nonEmpty, "scd2 build needs >= 1 tracked attribute")
-    val w = Window.partitionBy(col(keyCol))
-      .orderBy(col(tsCol), col(tieCol))
-    val del = coalesce(col(deletedCol).cast("boolean"), lit(false))
+    val del = deletedFlag(deletedCol)
     val screen = struct(attrCols.map(col) :+ del.as("_del"): _*)
     changes
       .withColumn("_del", del)
+      // first-row detection must be positional, NOT `_prev IS NULL`:
+      // a null previous ATTRIBUTE would then re-open a version on
+      // every consecutive null (the null-safe <=> handles the rest)
       .withColumn("_rn", row_number().over(w))
       .withColumn("_prev", lag(screen, 1).over(w))
       .filter(col("_rn") === 1 || !(col("_prev") <=> screen))
@@ -520,38 +491,56 @@ object RelOps {
         col("version") :+ col("is_current"): _*)
   }
 
-  /** [[scd2Apply]] for a TOMBSTONE-carrying delta against a
-    * [[scd2BuildWithDeletes]] history — the nightly-delta form of the
-    * soft-delete build (round-12): semantics = full-rebuild identity,
-    * `scd2ApplyWithDeletes(buildD(base), delta) == buildD(base ∪
-    * delta)`, which IS the q286 oracle.
+  /** INCREMENTAL SCD2 MAINTENANCE — apply a new batch of change rows
+    * to an existing [[scd2Build]] history (built with the same
+    * `deletedCol`) without rebuilding it: the real warehouse
+    * operation (a 100 TB dimension is maintained by nightly deltas;
+    * a full rebuild re-shuffles the entire change log every night,
+    * this touches ONLY the keys present in the delta).
     *
-    * The extra state vs [[scd2Apply]]: a key whose history ENDED
-    * DELETED has no current row, but its tombstone still matters —
-    * the first live delta row must open a NEW version numbered after
-    * the key's live count, and a repeated delta tombstone must
-    * no-op. The history encodes this recoverably: such a key's last
-    * close instant (`max(valid_to_us)`) is the tombstone's ts and
-    * `max(version)` is its live count, so the rebuild seed for it is
-    * a TOMBSTONE pseudo-row at (that ts, tie −1) with null attrs —
-    * the deleted flag alone drives the screen, so the attr payload
-    * is immaterial (a live row always differs from it; a delta
-    * tombstone row is dropped by the build either way). Open keys
-    * seed as in [[scd2Apply]]; version offsets are `open.version − 1`
-    * (the seed rebuilds as live version 1) vs `max(version)` (a
-    * tombstone seed emits no version). Same raise_error guards, with
-    * the straggler horizon = the open version's valid_from OR the
-    * tombstone instant. As with [[scd2Apply]], the guard is
-    * NECESSARY, NOT SUFFICIENT: base rows the build suppressed
-    * (no-op changes, REPEATED tombstones collapsed by the screen)
-    * are unrecoverable from the history, so a delta landing behind
-    * one of them passes the guard yet diverges from the full
-    * rebuild — the append-only feed ordering is the real contract.
-    * Same touched-keys-only scale shape. */
-  def scd2ApplyWithDeletes(hist: DataFrame, changes: DataFrame,
-                           keyCol: String, attrCols: Seq[String],
-                           tsCol: String, tieCol: String,
-                           deletedCol: String): DataFrame = {
+    * Semantics = full-rebuild equivalence: `scd2Apply(scd2Build(base),
+    * delta) == scd2Build(base ∪ delta)` — the q273/q286 oracle IS
+    * that identity. Mechanism: untouched keys (anti-join on the
+    * delta's key set) pass through byte-identical; for touched keys
+    * the CLOSED versions pass through and the rest of the key's
+    * history is re-seeded as one pseudo-change (tie sentinel −1, so
+    * it sorts before any real change) into a [[scd2Build]] over
+    * (seeds ∪ delta):
+    *  - a key with an OPEN version seeds it as a live row at its own
+    *    valid_from; rebuilt versions shift by its version − 1;
+    *  - a key whose history ENDED DELETED has no current row, but
+    *    its tombstone still matters: the first live delta row must
+    *    open a version numbered after the key's live count, and a
+    *    repeated delta tombstone must no-op. Its last close instant
+    *    (`max(valid_to_us)`) is the tombstone's ts and `max(version)`
+    *    its live count, so it seeds a TOMBSTONE at that ts with null
+    *    attrs (the flag alone drives the screen) and rebuilt versions
+    *    shift by that count. A live-only history has no such keys;
+    *  - a key new in the delta has no seed and builds from version 1.
+    *
+    * PRECONDITIONS (the standard append-only CDC contract; violations
+    * need a rebuild, they cannot be patched in place): every delta
+    * row's (ts, tie) is strictly AFTER EVERY base change row for its
+    * key, and `tieCol` is numeric and >= 0 (the −1 seed sentinel must
+    * sort first). Both are GUARDED at execution (round-12 ADVICE): a
+    * negative tie, or a delta ts behind the key's horizon (the open
+    * version's valid_from, or the tombstone that ended the key),
+    * raises a `raise_error` inside the rebuilt branch's plan instead
+    * of silently corrupting the dimension. The ts guard is
+    * NECESSARY, NOT SUFFICIENT (round-12 review): the history cannot
+    * see base rows the build SUPPRESSED (no-op changes, repeated
+    * tombstones), so a delta landing behind one of them passes the
+    * guard yet breaks the rebuild identity — only the feed's
+    * ordering discipline rules that out.
+    *
+    * Scale shape: one distinct on the delta's keys, two
+    * semi/anti-joins on the key, then [[scd2Build]]'s single (key)
+    * exchange + sort over O(touched keys' seeds + delta) — the
+    * closed history (the dominant mass) is never re-sorted. */
+  def scd2Apply(hist: DataFrame, changes: DataFrame, keyCol: String,
+                attrCols: Seq[String], tsCol: String, tieCol: String,
+                deletedCol: Option[String] = None): DataFrame = {
+    val delCol = deletedCol.getOrElse("_deleted")
     val keys = changes.select(col(keyCol)).distinct()
       .localCheckpoint() // splits hist twice
     val untouched = hist.join(keys, Seq(keyCol), "left_anti")
@@ -567,132 +556,44 @@ object RelOps {
       .filter(col("_o") === 0)
     val seedOpen = open.select(col(keyCol) +: attrCols.map(col) :+
       timestamp_micros(col("valid_from_us")).as(tsCol) :+
-      lit(-1L).as(tieCol) :+ lit(false).as(deletedCol): _*)
+      lit(-1L).as(tieCol) :+ lit(false).as(delCol): _*)
     val seedTomb = ended.select(col(keyCol) +:
       attrCols.map(c => lit(null).cast(hist.schema(c).dataType)
         .as(c)) :+
       timestamp_micros(col("_tomb_us")).as(tsCol) :+
-      lit(-1L).as(tieCol) :+ lit(true).as(deletedCol): _*)
+      lit(-1L).as(tieCol) :+ lit(true).as(delCol): _*)
+    // PRECONDITION GUARDS: they ride INSIDE the tie expression (a
+    // dropped side column would be pruned out of the plan and never
+    // evaluated). ts == horizon is legal: the tie breaks it after the
+    // seed. The ts screen is one equi-join against the O(touched
+    // keys) seeds — never the closed history; a key new in the delta
+    // joins null and passes.
     val horizon = open.select(col(keyCol),
         col("valid_from_us").as("_h"))
       .unionByName(ended.select(col(keyCol), col("_tomb_us").as("_h")))
     val delta = changes.select(col(keyCol) +: attrCols.map(col) :+
         col(tsCol) :+ col(tieCol).cast("long").as(tieCol) :+
-        coalesce(col(deletedCol).cast("boolean"), lit(false))
-          .as(deletedCol): _*)
+        deletedFlag(deletedCol).as(delCol): _*)
       .join(horizon, Seq(keyCol), "left")
-      .withColumn(tieCol,
-        when(col(tieCol) < 0, raise_error(concat(
-            lit(s"scd2ApplyWithDeletes: delta $tieCol must be >= 0 " +
-              "(-1 is the seed sentinel), got "),
-            col(tieCol).cast("string"))))
-          .when(unix_micros(col(tsCol)) < col("_h"),
-            raise_error(concat(
-              lit(s"scd2ApplyWithDeletes: delta ($tsCol, $tieCol) " +
-                s"precedes the key's horizon for $keyCol="),
-              col(keyCol).cast("string"),
-              lit(" - stragglers need the rebuild repair path"))))
-          .otherwise(col(tieCol)))
-      .drop("_h")
-    val voff = open.select(col(keyCol), (col("version") - 1).as("_voff"))
-      .unionByName(ended.select(col(keyCol), col("_maxv").as("_voff")))
-    val rebuilt = scd2BuildWithDeletes(
-        seedOpen.unionByName(seedTomb).unionByName(delta),
-        keyCol, attrCols, tsCol, tieCol, deletedCol)
-      .join(voff, Seq(keyCol), "left")
-      .withColumn("version",
-        col("version") + coalesce(col("_voff"), lit(0L)))
-      .drop("_voff", "is_current")
-    untouched.drop("is_current")
-      .unionByName(closed)
-      .unionByName(rebuilt)
-      .withColumn("is_current", col("valid_to_us").isNull)
-  }
-
-  /** INCREMENTAL SCD2 MAINTENANCE — apply a new batch of change rows
-    * to an existing [[scd2Build]] history without rebuilding it: the
-    * real warehouse operation (a 100 TB dimension is maintained by
-    * nightly deltas; a full rebuild re-shuffles the entire change log
-    * every night, this touches ONLY the keys present in the delta).
-    *
-    * Semantics = full-rebuild equivalence: `scd2Apply(scd2Build(base),
-    * delta) == scd2Build(base ∪ delta)` — the q273 oracle IS that
-    * identity, and Round11OpsSpec asserts it on a split fixture.
-    * Mechanism: untouched keys (anti-join on the delta's key set)
-    * pass through byte-identical; for touched keys the CLOSED
-    * versions pass through and the OPEN version is re-seeded as a
-    * pseudo-change (its own valid_from, tie sentinel −1 so it sorts
-    * before any real change) into a [[scd2Build]] over (seed ∪
-    * delta); rebuilt versions shift by the seed's version − 1. A key
-    * new in the delta has no seed and builds from version 1.
-    *
-    * PRECONDITIONS (the standard append-only CDC contract; violations
-    * need a rebuild, they cannot be patched in place): every delta
-    * row's (ts, tie) is strictly AFTER EVERY base change row for its
-    * key — the CDC feed delivers in order — and `tieCol` is numeric
-    * and >= 0 (the −1 seed sentinel must sort first). Both are
-    * GUARDED at execution (round-12 ADVICE): a negative tie or a
-    * delta ts behind the key's open valid_from raises a
-    * `raise_error` inside the rebuilt branch's plan instead of
-    * silently corrupting the dimension. The ts guard is NECESSARY,
-    * NOT SUFFICIENT (round-12 review): the history cannot see base
-    * rows the build SUPPRESSED (no-op changes after the open
-    * version's valid_from), so a delta landing between a suppressed
-    * base row and the feed head passes the guard yet breaks the
-    * rebuild identity — only the feed's ordering discipline rules
-    * that out; the guard catches the common violation class.
-    *
-    * Scale shape: one distinct on the delta's keys, two
-    * semi/anti-joins on the key, then [[scd2Build]]'s single (key)
-    * exchange + sort over O(touched keys' open rows + delta) — the
-    * closed history (the dominant mass) is never re-sorted. */
-  def scd2Apply(hist: DataFrame, changes: DataFrame, keyCol: String,
-                attrCols: Seq[String], tsCol: String,
-                tieCol: String): DataFrame = {
-    val keys = changes.select(col(keyCol)).distinct()
-      .localCheckpoint() // splits hist twice
-    val untouched = hist.join(keys, Seq(keyCol), "left_anti")
-    val affected = hist.join(keys, Seq(keyCol), "left_semi")
-      .localCheckpoint() // closed pass-through + seed + version offset
-    val closed = affected.filter(!col("is_current"))
-      .drop("is_current")
-    val open = affected.filter(col("is_current"))
-    val seed = open.select(col(keyCol) +: attrCols.map(col) :+
-      timestamp_micros(col("valid_from_us")).as(tsCol) :+
-      lit(-1L).as(tieCol): _*)
-    // PRECONDITION GUARDS (round-12 ADVICE): a violating delta
-    // previously produced a silently wrong history; now it fails the
-    // job at execution. The guards ride INSIDE the tie expression (a
-    // dropped side column would be pruned out of the plan and never
-    // evaluated): tie must be >= 0 (−1 is the seed sentinel — a
-    // negative delta tie could sort before the seed), and a delta
-    // row's ts must not precede the key's open-version valid_from
-    // (the append-only CDC contract; ts == valid_from is legal, the
-    // tie breaks it after the seed). The ts screen is one equi-join
-    // against the O(touched keys) open rows — never the closed
-    // history; a key new in the delta joins null and passes.
-    val openFrom = open.select(col(keyCol),
-      col("valid_from_us").as("_seed_from_us"))
-    val delta = changes.select(col(keyCol) +: attrCols.map(col) :+
-        col(tsCol) :+ col(tieCol).cast("long").as(tieCol): _*)
-      .join(openFrom, Seq(keyCol), "left")
       .withColumn(tieCol,
         when(col(tieCol) < 0, raise_error(concat(
             lit(s"scd2Apply: delta $tieCol must be >= 0 " +
               "(-1 is the seed sentinel), got "),
             col(tieCol).cast("string"))))
-          .when(unix_micros(col(tsCol)) < col("_seed_from_us"),
+          .when(unix_micros(col(tsCol)) < col("_h"),
             raise_error(concat(
               lit(s"scd2Apply: delta ($tsCol, $tieCol) precedes the " +
-                s"open version's valid_from for $keyCol="),
+                "open version's valid_from (or the tombstone that " +
+                s"ended the key) for $keyCol="),
               col(keyCol).cast("string"),
               lit(" - stragglers need the scd2Build repair path"))))
           .otherwise(col(tieCol)))
-      .drop("_seed_from_us")
-    val voff = open.select(col(keyCol),
-      (col("version") - 1).as("_voff"))
-    val rebuilt = scd2Build(seed.unionByName(delta), keyCol, attrCols,
-        tsCol, tieCol)
+      .drop("_h")
+    val voff = open.select(col(keyCol), (col("version") - 1).as("_voff"))
+      .unionByName(ended.select(col(keyCol), col("_maxv").as("_voff")))
+    val rebuilt = scd2Build(
+        seedOpen.unionByName(seedTomb).unionByName(delta),
+        keyCol, attrCols, tsCol, tieCol, Some(delCol))
       .join(voff, Seq(keyCol), "left")
       .withColumn("version",
         col("version") + coalesce(col("_voff"), lit(0L)))

@@ -1,10 +1,13 @@
 package graft.streaming
 
 import org.apache.spark.ml.PipelineModel
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, ListState, MapState, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{BooleanType, IntegerType, LongType, StructField, StructType}
+import org.apache.spark.util.LongAccumulator
+
+import graft.ops.RelOps
 
 /** Open-session state carried across micro-batches per key. */
 case class OpenSession(start: Long, end: Long, n: Long)
@@ -14,14 +17,21 @@ case class OpenSession(start: Long, end: Long, n: Long)
   * Top-level class — the processor is serialized to executors, and the
   * state handle is re-acquired per task via `init` (hence @transient).
   * Input rows are (key, value); output is (key, n, total) after the
-  * batch's rows are folded into state. */
-class RunningTotals
+  * batch's rows are folded into state.
+  *
+  * `ttl` other than `TTLConfig.NONE` (behind
+  * [[StreamOps.runningTotalsTtlStream]]) puts a real processing-time
+  * TTL on the state: a key idle for longer than it reads back as
+  * absent — its totals restart — which is the eviction discipline an
+  * unbounded-key-churn stream needs (TTL is processing-time-based in
+  * Spark, so the oracled queries pin cross-batch retention with the
+  * TTL-free form and the eviction contract is spec-pinned instead). */
+class RunningTotals(ttl: TTLConfig = TTLConfig.NONE)
     extends StatefulProcessor[Long, (Long, Double), (Long, Long, Double)] {
   @transient private var totals: ValueState[(Long, Double)] = _
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
     totals = getHandle.getValueState[(Long, Double)]("totals",
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaDouble),
-      TTLConfig.NONE)
+      Encoders.tuple(Encoders.scalaLong, Encoders.scalaDouble), ttl)
   override def handleInputRows(key: Long, rows: Iterator[(Long, Double)],
                                timerValues: TimerValues)
       : Iterator[(Long, Long, Double)] = {
@@ -95,66 +105,6 @@ class PerTypeCounts extends StatefulProcessor[
 case class SessionOut(user_id: Long, sess_start: java.sql.Timestamp,
                       sess_end: java.sql.Timestamp, n_events: Long)
 
-/** Open SCD2 version carried in the state store between micro-batches
-  * ([[StreamOps.scd2Stream]]): the tracked attribute pair, the
-  * version's opening instant, its rank, and the straggler horizon
-  * `(seenUs, seenTie)` (max ACCEPTED `(event time, tie)` SORT KEY —
-  * a suppressed no-op change advances it where `fromUs` cannot, so a
-  * cross-batch row slipping in behind a no-op is dropped+counted
-  * instead of silently diverging from the batch build; carrying the
-  * tie too closes the equal-timestamp gap: a cross-batch row with
-  * `ts == seenUs` but a SMALLER tie is also out of (ts, tie) order
-  * and must drop — round-13 ADVICE). One fixed-size record per
-  * ACTIVE key — dimension-maintenance state is bounded by key
-  * cardinality, never by event volume. `b` is boxed
-  * (`java.lang.Long`) so a NULL tracked attribute versions like the
-  * batch build's null-safe compare instead of crashing the primitive
-  * tuple decoder (round-12 ADVICE — batch/stream null parity).
-  *
-  * STATE-SCHEMA COMPATIBILITY (round-14: now VERSIONED, the
-  * round-13 verdict's task 4): this record's shape has changed
-  * across library versions (round 12 added `seenUs` and boxed `b`;
-  * round 13 added `seenTie`; round 14 added the `sv` version field
-  * itself — v4). A durable checkpoint written by an older build
-  * (e.g. via [[StreamOps.runFileSinkPhase]], which advertises
-  * cross-lifetime resume) CANNOT be resumed by a newer one. Two
-  * fences now fail loudly instead of leaving that undefined: a
-  * FIELD-SHAPE change trips Spark's own state-schema compatibility
-  * checker at restore; a SEMANTIC change that keeps the shape (the
-  * class Spark's checker cannot see — e.g. reinterpreting `seenUs`)
-  * trips [[StreamOps.requireScd2StateVersion]] on the first restored
-  * key, with the rebuild instruction in the message. There is no
-  * migration path by design: rebuild the dimension from the batch
-  * twin ([[graft.ops.RelOps.scd2Build]]) and start a fresh
-  * checkpoint. */
-case class Scd2Open(a: String, b: java.lang.Long, fromUs: Long,
-                    version: Long, seenUs: Long, seenTie: Long,
-                    sv: Int)
-
-/** A CLOSED dimension version emitted by [[StreamOps.scd2Stream]]. */
-case class Scd2Closed(user_id: Long, event_type: String,
-                      band: java.lang.Long,
-                      valid_from_us: Long, valid_to_us: Long,
-                      version: Long)
-
-/** Per-key state of [[StreamOps.scd2StreamWithDeletes]]: whether a
-  * version is open, its attributes/opening instant when it is, the
-  * straggler horizon `(seenUs, seenTie)` (the max `(event time,
-  * tie)` sort key ACCEPTED for the key — advanced by every row
-  * including suppressed no-ops and repeated tombstones, which
-  * `fromUs` alone cannot see; the tie component closes the
-  * equal-timestamp ordering gap, round-13 ADVICE), and the
-  * LIVE-version counter that survives delete gaps (the batch build
-  * numbers live rows only, so the counter must not reset when a
-  * tombstone clears the open version). One fixed-size record per key
-  * ever seen. Same state-schema versioning contract as [[Scd2Open]]
-  * (`sv` checked on restore, stale versions rejected loudly):
-  * resuming an older build's durable checkpoint is not supported —
-  * rebuild from the batch twin. */
-case class Scd2DelState(open: Boolean, a: String, b: java.lang.Long,
-                        fromUs: Long, version: Long, seenUs: Long,
-                        seenTie: Long, sv: Int)
-
 /** `transformWithState` processor behind
   * [[StreamOps.sessionizeTimersStream]]: gap sessionization where the
   * final session per key is closed by an EVENT-TIME TIMER instead of
@@ -227,29 +177,6 @@ class SessionTimers(gapSeconds: Long) extends StatefulProcessor[
   }
 }
 
-/** [[RunningTotals]] with a real processing-time TTL on its state
-  * (spec-exercised): a key idle for longer than `ttl` reads back as
-  * absent — its totals restart — which is the eviction discipline an
-  * unbounded-key-churn stream needs (TTL is processing-time-based in
-  * Spark, so the oracled queries pin cross-batch retention with
-  * TTL-free twins and the eviction contract is spec-pinned instead). */
-class RunningTotalsTtl(ttl: java.time.Duration) extends StatefulProcessor[
-    Long, (Long, Double), (Long, Long, Double)] {
-  @transient private var totals: ValueState[(Long, Double)] = _
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    totals = getHandle.getValueState[(Long, Double)]("totals",
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaDouble),
-      TTLConfig(ttl))
-  override def handleInputRows(key: Long, rows: Iterator[(Long, Double)],
-                               timerValues: TimerValues)
-      : Iterator[(Long, Long, Double)] = {
-    var (n, total) = if (totals.exists()) totals.get() else (0L, 0.0)
-    rows.foreach { case (_, v) => n += 1; total += v }
-    totals.update((n, total))
-    Iterator((key, n, total))
-  }
-}
-
 /** `transformWithState` processor behind
   * [[StreamOps.idleFlushStream]] — the PROCESSING-TIME timer half of
   * the timer API ([[SessionTimers]] exercises event time): per key,
@@ -317,11 +244,26 @@ object StreamOps {
 
   /** SCD2 streaming state-schema version (round-13 verdict task 4).
     * History: v1 original (a, b, fromUs, version); v2 + `seenUs`,
-    * boxed `b`; v3 + `seenTie`; v4 + this field itself. Bump on ANY
-    * change to the state layout OR its interpretation; every state
-    * record is written with the current value and checked on restore
-    * by [[requireScd2StateVersion]]. */
-  val Scd2StateVersion: Int = 4
+    * boxed `b`; v3 + `seenTie`; v4 + this field itself; v5 one
+    * row-encoded layout for every [[scd2Stream]] form — `(attrs...,
+    * open, fromUs, version, seenUs, seenTie, sv)` — replacing the
+    * two-attribute case-class records. Bump on ANY change to the
+    * state layout OR its interpretation; every state record is
+    * written with the current value and checked on restore by
+    * [[requireScd2StateVersion]].
+    *
+    * A durable checkpoint written by an older build (e.g. via
+    * [[runFileSinkPhase]], which advertises cross-lifetime resume)
+    * CANNOT be resumed by a newer one. Two fences fail loudly
+    * instead of leaving that undefined: a FIELD-SHAPE change trips
+    * Spark's own state-schema compatibility checker at restore; a
+    * SEMANTIC change that keeps the shape (the class Spark's checker
+    * cannot see — e.g. reinterpreting `seenUs`) trips
+    * [[requireScd2StateVersion]] on the first restored key. There is
+    * no migration path by design: rebuild the dimension from the
+    * batch twin ([[graft.ops.RelOps.scd2Build]]) and start a fresh
+    * checkpoint. */
+  val Scd2StateVersion: Int = 5
 
   /** Fail-loudly fence for restored SCD2 state whose version does not
     * match this build (covers the semantic-change class Spark's own
@@ -335,7 +277,7 @@ object StreamOps {
           s"version $found, this build expects $Scd2StateVersion. " +
           "Durable checkpoints do not migrate across state-schema " +
           "versions — rebuild the dimension from the batch twin " +
-          "(RelOps.scd2Build / scd2BuildWithDeletes) and start a " +
+          "(RelOps.scd2Build, with the same deletedCol) and start a " +
           "fresh checkpoint.")
 
   /** File-based stream source with a pinned schema (inference is
@@ -459,240 +401,61 @@ object StreamOps {
   /** STREAMING SCD2 DIMENSION MAINTENANCE — [[graft.ops.RelOps.scd2Build]]
     * run ONLINE (the streaming sibling of the batch build and of
     * [[graft.ops.RelOps.scd2Apply]]'s delta form): per key, each
-    * change of the tracked attribute pair CLOSES the open version
+    * change of the tracked attributes CLOSES the open version
     * (emitted downstream) and opens the next; no-op changes are
-    * suppressed with the same null-safe compare; the final version
-    * per key stays OPEN in the state store (the q49 closed-only
-    * emission convention — the oracle is the batch build minus its
-    * is_current rows). State = ONE [[Scd2Open]] per active key.
+    * suppressed; the final version per key stays OPEN in the state
+    * store (the q49 closed-only emission convention — the oracle is
+    * the batch build with the same `deletedCol`, minus its is_current
+    * rows). Output columns: key, attrs..., valid_from_us,
+    * valid_to_us, version.
+    *
+    * ATTRIBUTES: the state and the emitted versions are ROW-encoded
+    * over the tracked columns' actual schema (`Encoders.row` — no
+    * arity ceiling, no type pinning). The change screen is a
+    * per-field NULL-SAFE compare (`Objects.equals` over boxed values
+    * — exactly the batch build's whole-struct `<=>`: per-field
+    * null==null is a no-op, null→value opens). Tracked columns must
+    * be atomic (string/numeric/boolean/date/timestamp).
+    *
+    * TOMBSTONES: a row whose `deletedCol` is true CLOSES the key's
+    * open version and opens nothing; a later live row re-opens with
+    * the live-version counter continuing across the gap (versions
+    * number live rows only, the batch rule); repeated and leading
+    * tombstones are no-ops. `None`, and a null flag, read as false.
     *
     * ORDERING CONTRACT: rows are sorted by (ts, tie) WITHIN each
     * micro-batch (the group iterator carries no order), and batches
     * must arrive in event-time order per key (q121's
     * `stageTypedBatches` staging, or any time-partitioned landing
-    * layout) — a cross-batch straggler whose `(ts, tie)` sort key is
-    * lexicographically below the key's max ACCEPTED sort key
-    * (`Scd2Open.seenUs`/`seenTie` — suppressed no-ops advance it
-    * too) cannot be versioned retroactively and is
-    * DROPPED. The drop is
-    * OBSERVABLE (round-12 verdict task 4 — silent data loss at
-    * 100 TB must be a monitored quantity): pass `droppedStragglers`
+    * layout). A cross-batch straggler whose `(ts, tie)` sort key is
+    * lexicographically below the key's max ACCEPTED sort key (the
+    * state's `(seenUs, seenTie)` — suppressed no-ops and repeated
+    * tombstones advance it too) cannot be versioned retroactively
+    * and is DROPPED. The drop is observable: pass `droppedStragglers`
     * (a driver-registered `LongAccumulator`) and every dropped row
-    * adds 1; monitor it per batch from a
-    * `StreamingQueryListener`/`foreachBatch`. Accumulator counts are
-    * AT-LEAST-ONCE under task retries/micro-batch replays (Spark's
-    * standard action-accumulator semantics) — correct for a "nonzero
-    * means investigate" monitor; the batch
-    * [[graft.ops.RelOps.scd2Build]] is the repair path, same
-    * contract as scd2Apply's precondition.
+    * adds 1. Accumulator counts are AT-LEAST-ONCE under task
+    * retries/micro-batch replays — correct for a "nonzero means
+    * investigate" monitor; the batch build is the repair path.
     *
-    * NULL attributes: `bCol` rides boxed in [[Scd2Open]], so a null
-    * tracked attribute opens/closes versions under the same
-    * null==null no-op rule as the batch build's `<=>` screen —
-    * batch/stream parity on null attrs (round-12 ADVICE fix). */
-  def scd2Stream(events: DataFrame, keyCol: String, aCol: String,
-                 bCol: String, tsCol: String, tieCol: String,
-                 droppedStragglers: Option[
-                   org.apache.spark.util.LongAccumulator] = None)
-      : Dataset[Scd2Closed] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val typed = events.select(col(keyCol).cast("long"),
-        col(aCol).cast("string"), col(bCol).cast("long"),
-        unix_micros(col(tsCol)), col(tieCol).cast("long"))
-      .as[(Long, String, java.lang.Long, Long, Long)]
-    typed.groupByKey(_._1)
-      .flatMapGroupsWithState[Scd2Open, Scd2Closed](
-          OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: Long,
-         rows: Iterator[(Long, String, java.lang.Long, Long, Long)],
-         state: GroupState[Scd2Open]) =>
-          scd2Step(key, rows, state, droppedStragglers)
-      }
-  }
-
-  /** Per-key transition of [[scd2Stream]], factored out so the
-    * state-version fence is testable against a constructed
-    * `TestGroupState` (an old checkpoint cannot be written by this
-    * build, by definition). */
-  private[graft] def scd2Step(key: Long,
-      rows: Iterator[(Long, String, java.lang.Long, Long, Long)],
-      state: GroupState[Scd2Open],
-      droppedStragglers: Option[
-        org.apache.spark.util.LongAccumulator]): Iterator[Scd2Closed] = {
-    val sorted = rows.toArray.sortBy(r => (r._4, r._5))
-    var open = state.getOption
-    open.foreach(o => requireScd2StateVersion(o.sv))
-    val closed =
-      scala.collection.mutable.ArrayBuffer[Scd2Closed]()
-    sorted.foreach { case (_, a, b, us, tie) =>
-      open match {
-        // cross-batch straggler: (ts, tie) lexicographically
-        // below the accepted horizon — equal-ts smaller-tie
-        // rows are out of sort order too (round-13 ADVICE)
-        case Some(o) if us < o.seenUs ||
-            (us == o.seenUs && tie < o.seenTie) =>
-          droppedStragglers.foreach(_.add(1L))
-        case Some(o) if o.a == a && o.b == b => // no-op change —
-          // still advances the straggler horizon
-          open = Some(o.copy(seenUs = us, seenTie = tie))
-        case Some(o) =>
-          closed += Scd2Closed(key, o.a, o.b, o.fromUs, us,
-            o.version)
-          open = Some(Scd2Open(a, b, us, o.version + 1, us, tie,
-            Scd2StateVersion))
-        case None =>
-          open = Some(Scd2Open(a, b, us, 1L, us, tie,
-            Scd2StateVersion))
-      }
-    }
-    open.foreach(state.update)
-    closed.iterator
-  }
-
-  /** MULTI-ATTRIBUTE [[scd2Stream]] — the streaming sibling of the
-    * general batch build [[graft.ops.RelOps.scd2Build]]`(Seq)`
-    * (round-13 verdict task 3: the two-attr `scd2Stream` hardcodes a
-    * (String, Long) pair; real dimensions track MANY columns of
-    * arbitrary atomic types). The per-key state and the emitted
-    * closed versions are ROW-encoded over the tracked columns'
-    * ACTUAL schema (`Encoders.row` — no tuple-arity ceiling, no
-    * type pinning); the change screen is a per-field NULL-SAFE
-    * compare (`Objects.equals` over boxed values — exactly the batch
-    * build's whole-struct `<=>`: per-field null==null is a no-op).
-    * Tracked columns must be atomic (string/numeric/boolean/
-    * date/timestamp) — array/map/struct attrs would need deep
-    * equality and are not part of the contract.
-    *
-    * Semantics otherwise IDENTICAL to [[scd2Stream]]: (ts, tie)
-    * sort within each micro-batch, event-time-ordered batches per
-    * key, `(seenUs, seenTie)` lexicographic straggler horizon with
-    * the optional observable drop counter, closed-only emission
-    * (the final version per key stays open in the state store) — the
-    * oracle is the multi-attr batch chain minus its is_current rows.
-    * Output columns: key, attrs..., valid_from_us, valid_to_us,
-    * version. State = ONE row-encoded record per active key — same
-    * key-cardinality bound, same state-schema compatibility caveat
-    * as [[Scd2Open]]. */
-  def scd2StreamMulti(events: DataFrame, keyCol: String,
-                      attrCols: Seq[String], tsCol: String,
-                      tieCol: String,
-                      droppedStragglers: Option[
-                        org.apache.spark.util.LongAccumulator] = None)
+    * State = ONE row per key ever seen, layout [[Scd2StateVersion]]
+    * v5 — bounded by key cardinality, never by event volume. */
+  def scd2Stream(events: DataFrame, keyCol: String,
+                 attrCols: Seq[String], tsCol: String, tieCol: String,
+                 deletedCol: Option[String] = None,
+                 droppedStragglers: Option[LongAccumulator] = None)
       : DataFrame = {
-    require(attrCols.nonEmpty,
-      "scd2StreamMulti needs >= 1 tracked attribute")
+    require(attrCols.nonEmpty, "scd2Stream needs >= 1 tracked attribute")
     val spark = events.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StructField}
     val na = attrCols.length
-    val proj = events.select(
-      col(keyCol).cast("long").as("_k") +:
-        attrCols.map(col) :+
-        unix_micros(col(tsCol)).as("_us") :+
-        col(tieCol).cast("long").as("_tie"): _*)
-    val attrFields = proj.schema.fields.slice(1, 1 + na)
-    // state row layout: attrs[0..na-1], fromUs, version, seenUs,
-    // seenTie, sv (the Scd2StateVersion fence — round-14)
-    val stateSchema = StructType(attrFields ++ Seq(
-      StructField("_from_us", LongType, nullable = false),
-      StructField("_version", LongType, nullable = false),
-      StructField("_seen_us", LongType, nullable = false),
-      StructField("_seen_tie", LongType, nullable = false),
-      StructField("_sv", org.apache.spark.sql.types.IntegerType,
-        nullable = false)))
-    val outSchema = StructType(
-      StructField(keyCol, LongType, nullable = false) +:
-        attrFields :+
-        StructField("valid_from_us", LongType, nullable = false) :+
-        StructField("valid_to_us", LongType, nullable = false) :+
-        StructField("version", LongType, nullable = false))
-    val stateEnc = Encoders.row(stateSchema)
-    val outEnc = Encoders.row(outSchema)
-    val ds = proj.groupByKey(_.getLong(0))
-      .flatMapGroupsWithState[Row, Row](
-          OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: Long, rows: Iterator[Row], state: GroupState[Row]) =>
-          val sorted = rows.toArray.sortBy(r =>
-            (r.getLong(1 + na), r.getLong(2 + na)))
-          var open = state.getOption
-          open.foreach(o => requireScd2StateVersion(o.getInt(na + 4)))
-          val closed = scala.collection.mutable.ArrayBuffer[Row]()
-          def sameAttrs(o: Row, r: Row): Boolean =
-            (0 until na).forall(i =>
-              java.util.Objects.equals(o.get(i), r.get(1 + i)))
-          sorted.foreach { r =>
-            val us = r.getLong(1 + na)
-            val tie = r.getLong(2 + na)
-            open match {
-              case Some(o) if us < o.getLong(na + 2) ||
-                  (us == o.getLong(na + 2) && tie < o.getLong(na + 3)) =>
-                // cross-batch straggler: (ts, tie) below the accepted
-                // horizon — dropped + counted, never re-versioned
-                droppedStragglers.foreach(_.add(1L))
-              case Some(o) if sameAttrs(o, r) => // no-op change —
-                // still advances the straggler horizon
-                // (Seq[Any]: keeps the Int version field from being
-                // numerically harmonized to Long by the Seq literal)
-                open = Some(Row.fromSeq(
-                  o.toSeq.take(na + 2) ++
-                    Seq[Any](us, tie, Scd2StateVersion)))
-              case Some(o) =>
-                closed += Row.fromSeq(
-                  key +: (0 until na).map(o.get) :+
-                    o.getLong(na) :+ us :+ o.getLong(na + 1))
-                open = Some(Row.fromSeq(
-                  (0 until na).map(i => r.get(1 + i)) ++
-                    Seq[Any](us, o.getLong(na + 1) + 1, us, tie,
-                      Scd2StateVersion)))
-              case None =>
-                open = Some(Row.fromSeq(
-                  (0 until na).map(i => r.get(1 + i)) ++
-                    Seq[Any](us, 1L, us, tie, Scd2StateVersion)))
-            }
-          }
-          open.foreach(state.update)
-          closed.iterator
-      }(stateEnc, outEnc)
-    ds.toDF()
-  }
-
-  /** [[scd2StreamMulti]] WITH TOMBSTONES — completes the SCD2 matrix
-    * (batch/stream × single/multi-attribute × live/CDC-delete): the
-    * row-encoded multi-attribute state of [[scd2StreamMulti]] with
-    * [[scd2StreamWithDeletes]]' tombstone fold — a `deletedCol=true`
-    * row CLOSES the key's open version and opens nothing; the
-    * live-version counter survives delete gaps; repeated/leading
-    * tombstones no-op; null deleted reads false. Same `(seenUs,
-    * seenTie)` lexicographic straggler rule, observable drop counter,
-    * closed-only emission — the oracle is the multi-attr batch
-    * tombstone chain minus its is_current rows. State row layout:
-    * attrs..., open, fromUs, version, seenUs, seenTie — one record
-    * per key ever seen. */
-  def scd2StreamMultiWithDeletes(events: DataFrame, keyCol: String,
-                                 attrCols: Seq[String], tsCol: String,
-                                 tieCol: String, deletedCol: String,
-                                 droppedStragglers: Option[
-                                   org.apache.spark.util.LongAccumulator]
-                                   = None): DataFrame = {
-    require(attrCols.nonEmpty,
-      "scd2StreamMultiWithDeletes needs >= 1 tracked attribute")
-    val spark = events.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{BooleanType, LongType, StructField}
-    val na = attrCols.length
+    // input row layout: key, attrs[0..na-1], us, tie, deleted
     val proj = events.select(
       col(keyCol).cast("long").as("_k") +:
         attrCols.map(col) :+
         unix_micros(col(tsCol)).as("_us") :+
         col(tieCol).cast("long").as("_tie") :+
-        coalesce(col(deletedCol).cast("boolean"), lit(false))
-          .as("_del"): _*)
+        RelOps.deletedFlag(deletedCol).as("_del"): _*)
     val attrFields = proj.schema.fields.slice(1, 1 + na)
-    // state row layout: attrs[0..na-1], open, fromUs, version,
-    // seenUs, seenTie, sv (the Scd2StateVersion fence — round-14)
     val stateSchema = StructType(attrFields.map(_.copy(nullable = true))
       ++ Seq(
       StructField("_open", BooleanType, nullable = false),
@@ -700,150 +463,67 @@ object StreamOps {
       StructField("_version", LongType, nullable = false),
       StructField("_seen_us", LongType, nullable = false),
       StructField("_seen_tie", LongType, nullable = false),
-      StructField("_sv", org.apache.spark.sql.types.IntegerType,
-        nullable = false)))
+      StructField("_sv", IntegerType, nullable = false)))
     val outSchema = StructType(
       StructField(keyCol, LongType, nullable = false) +:
         attrFields :+
         StructField("valid_from_us", LongType, nullable = false) :+
         StructField("valid_to_us", LongType, nullable = false) :+
         StructField("version", LongType, nullable = false))
-    val stateEnc = Encoders.row(stateSchema)
-    val outEnc = Encoders.row(outSchema)
-    val ds = proj.groupByKey(_.getLong(0))
+    proj.groupByKey(_.getLong(0))
       .flatMapGroupsWithState[Row, Row](
           OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (key: Long, rows: Iterator[Row], state: GroupState[Row]) =>
-          val sorted = rows.toArray.sortBy(r =>
-            (r.getLong(1 + na), r.getLong(2 + na)))
-          state.getOption.foreach(o =>
-            requireScd2StateVersion(o.getInt(na + 5)))
-          var st = state.getOption.getOrElse(Row.fromSeq(
-            Seq.fill[Any](na)(null) ++
-              Seq(false, Long.MinValue, 0L, Long.MinValue,
-                Long.MinValue, Scd2StateVersion)))
-          val closed = scala.collection.mutable.ArrayBuffer[Row]()
-          def isOpen = st.getBoolean(na)
-          def sameAttrs(r: Row): Boolean =
-            (0 until na).forall(i =>
-              java.util.Objects.equals(st.get(i), r.get(1 + i)))
-          sorted.foreach { r =>
-            val us = r.getLong(1 + na)
-            val tie = r.getLong(2 + na)
-            val del = r.getBoolean(3 + na)
-            if (us < st.getLong(na + 3) ||
-                (us == st.getLong(na + 3) && tie < st.getLong(na + 4))) {
-              // cross-batch straggler below the (ts, tie) horizon
-              droppedStragglers.foreach(_.add(1L))
-            } else if (del) {
-              if (isOpen) { // tombstone closes, opens nothing
-                closed += Row.fromSeq(
-                  key +: (0 until na).map(st.get) :+
-                    st.getLong(na + 1) :+ us :+ st.getLong(na + 2))
-                st = Row.fromSeq(Seq.fill[Any](na)(null) ++
-                  Seq(false, us, st.getLong(na + 2), us, tie,
-                    Scd2StateVersion))
-              } else { // repeated/leading tombstone — emits nothing
-                st = Row.fromSeq((0 until na).map(st.get) ++
-                  Seq(false, st.getLong(na + 1), st.getLong(na + 2),
-                    us, tie, Scd2StateVersion))
-              }
-            } else if (isOpen && sameAttrs(r)) { // no-op change —
-              // still advances the straggler horizon
-              st = Row.fromSeq((0 until na).map(st.get) ++
-                Seq(true, st.getLong(na + 1), st.getLong(na + 2),
-                  us, tie, Scd2StateVersion))
-            } else {
-              if (isOpen) closed += Row.fromSeq(
-                key +: (0 until na).map(st.get) :+
-                  st.getLong(na + 1) :+ us :+ st.getLong(na + 2))
-              st = Row.fromSeq((0 until na).map(i => r.get(1 + i)) ++
-                Seq(true, us, st.getLong(na + 2) + 1, us, tie,
-                  Scd2StateVersion))
-            }
-          }
-          state.update(st)
-          closed.iterator
-      }(stateEnc, outEnc)
-    ds.toDF()
+          scd2Step(key, na, rows, state, droppedStragglers)
+      }(Encoders.row(stateSchema), Encoders.row(outSchema))
+      .toDF()
   }
 
-  /** [[scd2Stream]] WITH TOMBSTONES — the streaming sibling of
-    * [[graft.ops.RelOps.scd2BuildWithDeletes]] (q282's batch
-    * semantics run online): a row whose `deletedCol` is true CLOSES
-    * the key's open version (emitted immediately) and opens nothing;
-    * a later live row re-opens with the live-version counter
-    * continuing across the gap (versions number live rows only, the
-    * batch rule); repeated tombstones and leading tombstones are
-    * no-ops; null `deletedCol` reads as false. Same ordering
-    * contract, straggler rule (`(ts, tie)` below the accepted
-    * horizon drops, counted
-    * into `droppedStragglers`), and closed-only emission convention
-    * as [[scd2Stream]] — the oracle is the batch tombstone chain
-    * minus its is_current rows. State = ONE [[Scd2DelState]] per
-    * key. */
-  def scd2StreamWithDeletes(events: DataFrame, keyCol: String,
-                            aCol: String, bCol: String, tsCol: String,
-                            tieCol: String, deletedCol: String,
-                            droppedStragglers: Option[
-                              org.apache.spark.util.LongAccumulator] =
-                              None): Dataset[Scd2Closed] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val typed = events.select(col(keyCol).cast("long"),
-        col(aCol).cast("string"), col(bCol).cast("long"),
-        unix_micros(col(tsCol)), col(tieCol).cast("long"),
-        coalesce(col(deletedCol).cast("boolean"), lit(false)))
-      .as[(Long, String, java.lang.Long, Long, Long, Boolean)]
-    typed.groupByKey(_._1)
-      .flatMapGroupsWithState[Scd2DelState, Scd2Closed](
-          OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: Long,
-         rows: Iterator[(Long, String, java.lang.Long, Long, Long,
-           Boolean)],
-         state: GroupState[Scd2DelState]) =>
-          val sorted = rows.toArray.sortBy(r => (r._4, r._5))
-          state.getOption.foreach(o => requireScd2StateVersion(o.sv))
-          var st = state.getOption.getOrElse(
-            Scd2DelState(open = false, null, null, Long.MinValue, 0L,
-              Long.MinValue, Long.MinValue, Scd2StateVersion))
-          val closed =
-            scala.collection.mutable.ArrayBuffer[Scd2Closed]()
-          sorted.foreach { case (_, a, b, us, tie, del) =>
-            if (us < st.seenUs ||
-                (us == st.seenUs && tie < st.seenTie)) {
-              // cross-batch straggler: (ts, tie) lexicographically
-              // below the max ACCEPTED sort key — suppressed no-ops
-              // and repeated tombstones advance the horizon too, or
-              // a row slipping in behind one would silently diverge
-              // from the batch build (round-12 review finding;
-              // equal-ts tie component round-13 ADVICE)
-              droppedStragglers.foreach(_.add(1L))
-            } else if (del) {
-              if (st.open) { // tombstone closes, opens nothing
-                closed += Scd2Closed(key, st.a, st.b, st.fromUs, us,
-                  st.version)
-                st = Scd2DelState(open = false, null, null, us,
-                  st.version, us, tie, Scd2StateVersion)
-              } else { // repeated/leading tombstone — emits nothing
-                st = st.copy(seenUs = us, seenTie = tie)
-              }
-            } else if (st.open && st.a == a && st.b == b) {
-              // no-op change (null-safe)
-              st = st.copy(seenUs = us, seenTie = tie)
-            } else if (st.open) {
-              closed += Scd2Closed(key, st.a, st.b, st.fromUs, us,
-                st.version)
-              st = Scd2DelState(open = true, a, b, us,
-                st.version + 1, us, tie, Scd2StateVersion)
-            } else { // (re-)open after a gap or for a new key
-              st = Scd2DelState(open = true, a, b, us,
-                st.version + 1, us, tie, Scd2StateVersion)
-            }
-          }
-          state.update(st)
-          closed.iterator
+  /** Per-key transition of [[scd2Stream]] over `na` tracked
+    * attributes, factored out so the state-version fence is testable
+    * against a constructed `TestGroupState` (an old checkpoint cannot
+    * be written by this build, by definition). Input rows are (key,
+    * attrs..., us, tie, deleted); the state row is (attrs..., open,
+    * fromUs, version, seenUs, seenTie, sv); emitted rows are (key,
+    * attrs..., fromUs, toUs, version). */
+  private[graft] def scd2Step(key: Long, na: Int, rows: Iterator[Row],
+      state: GroupState[Row],
+      droppedStragglers: Option[LongAccumulator]): Iterator[Row] = {
+    val sorted = rows.toArray.sortBy(r =>
+      (r.getLong(1 + na), r.getLong(2 + na)))
+    state.getOption.foreach(o => requireScd2StateVersion(o.getInt(na + 5)))
+    var st = state.getOption.getOrElse(Row.fromSeq(
+      Seq.fill[Any](na)(null) ++ Seq[Any](false, Long.MinValue, 0L,
+        Long.MinValue, Long.MinValue, Scd2StateVersion)))
+    val closed = scala.collection.mutable.ArrayBuffer[Row]()
+    sorted.foreach { r =>
+      val us = r.getLong(1 + na)
+      val tie = r.getLong(2 + na)
+      val seenUs = st.getLong(na + 3)
+      if (us < seenUs || (us == seenUs && tie < st.getLong(na + 4))) {
+        // cross-batch straggler: (ts, tie) below the accepted horizon
+        droppedStragglers.foreach(_.add(1L))
+      } else {
+        val open = st.getBoolean(na)
+        val del = r.getBoolean(3 + na)
+        val attrs = (0 until na).map(st.get)
+        val noOp = open && !del && (0 until na).forall(i =>
+          java.util.Objects.equals(attrs(i), r.get(1 + i)))
+        val version = st.getLong(na + 2)
+        // a change or a tombstone closes the open version
+        if (open && !noOp) closed += Row.fromSeq(
+          key +: attrs :+ st.getLong(na + 1) :+ us :+ version)
+        // (Seq[Any]: keeps the Int `sv` from being harmonized to Long)
+        st = if (del || noOp) // horizon only; a tombstone leaves it closed
+            Row.fromSeq(attrs ++ Seq[Any](noOp, st.getLong(na + 1),
+              version, us, tie, Scd2StateVersion))
+          else // (re-)open; the live-version counter survives gaps
+            Row.fromSeq((1 to na).map(r.get) ++ Seq[Any](true, us,
+              version + 1, us, tie, Scd2StateVersion))
       }
+    }
+    state.update(st)
+    closed.iterator
   }
 
   /** Stream-stream interval equi-join: match each left event with the
@@ -1150,14 +830,14 @@ object StreamOps {
   }
 
   /** [[runningTotalsStream]] with a processing-time TTL on the state —
-    * see [[RunningTotalsTtl]]. Spec-exercised (TTL expiry depends on
+    * see [[RunningTotals]]. Spec-exercised (TTL expiry depends on
     * wall-clock batch spacing, so it cannot be oracled). */
   def runningTotalsTtlStream(events: Dataset[(Long, Double)],
                              ttl: java.time.Duration)
       : Dataset[(Long, Long, Double)] = {
     import events.sparkSession.implicits._
     events.groupByKey(_._1)
-      .transformWithState(new RunningTotalsTtl(ttl),
+      .transformWithState(new RunningTotals(TTLConfig(ttl)),
         TimeMode.ProcessingTime(), OutputMode.Update())
   }
 }

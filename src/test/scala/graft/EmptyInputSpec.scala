@@ -217,19 +217,19 @@ class EmptyInputSpec extends AnyFunSuite {
     val emptyChg = Seq.empty[(Long, String,
       java.sql.Timestamp, Long, Boolean)]
       .toDF("k", "attr", "ts", "tie", "deleted")
-    assert(RelOps.scd2BuildWithDeletes(emptyChg, "k", Seq("attr"),
-      "ts", "tie", "deleted").count() === 0)
+    assert(RelOps.scd2Build(emptyChg, "k", Seq("attr"),
+      "ts", "tie", Some("deleted")).count() === 0)
     val loneTomb = Seq((1L, "x",
         new java.sql.Timestamp(1000L), 1L, true))
       .toDF("k", "attr", "ts", "tie", "deleted")
-    assert(RelOps.scd2BuildWithDeletes(loneTomb, "k", Seq("attr"),
-      "ts", "tie", "deleted").count() === 0)
+    assert(RelOps.scd2Build(loneTomb, "k", Seq("attr"),
+      "ts", "tie", Some("deleted")).count() === 0)
     // tombstone apply with an empty delta: history passes through
-    val hist = RelOps.scd2BuildWithDeletes(loneTomb
+    val hist = RelOps.scd2Build(loneTomb
         .withColumn("deleted", lit(false)), "k", Seq("attr"),
-      "ts", "tie", "deleted")
-    assert(RelOps.scd2ApplyWithDeletes(hist, emptyChg, "k",
-        Seq("attr"), "ts", "tie", "deleted")
+      "ts", "tie", Some("deleted"))
+    assert(RelOps.scd2Apply(hist, emptyChg, "k",
+        Seq("attr"), "ts", "tie", Some("deleted"))
       .collect().toSeq === hist.collect().toSeq)
     // capReport: empty -> empty report; recommendCap falls to floor
     assert(graft.ops.AggOps.capReport(

@@ -163,7 +163,7 @@ class Round10OpsSpec extends AnyFunSuite {
       (2000L, Option.empty[String], 7L), (2000L, Option("x"), 8L))
       .toDF("k", "attr", "tie")
       .withColumn("ts", timestamp_micros(col("tie") * 1000000L))
-    val got = RelOps.scd2Build(log, "k", "attr", "ts", "tie")
+    val got = RelOps.scd2Build(log, "k", Seq("attr"), "ts", "tie")
       .orderBy(col("k"), col("version")).collect()
       .map(r => (r.getLong(0), Option(r.getString(1)), r.getLong(2),
         if (r.isNullAt(3)) -1L else r.getLong(3), r.getLong(4),

@@ -172,14 +172,17 @@ class Round11OpsSpec extends AnyFunSuite {
     assert(got(1) === ((2L, 0L, 3L, 0L)))
   }
 
-  test("scd2Build: single-attr overload is exactly the 1-element " +
-       "multi-attr build (q254 unchanged by the generalization)") {
+  test("scd2Build: an all-null deletedCol is exactly the build " +
+       "without one on the events fixture (q254's single-attr shape)") {
     val ev = Tables.load(spark, "/root/testdata/sf0.001", "events")
-    val a = RelOps.scd2Build(ev, "user_id", "event_type", "ts",
+    val a = RelOps.scd2Build(ev, "user_id", Seq("event_type"), "ts",
       "event_id").orderBy(col("user_id"), col("version"))
-    val b = RelOps.scd2Build(ev, "user_id", Seq("event_type"), "ts",
-      "event_id").orderBy(col("user_id"), col("version"))
+    val b = RelOps.scd2Build(
+        ev.withColumn("deleted", lit(null).cast("boolean")), "user_id",
+        Seq("event_type"), "ts", "event_id", Some("deleted"))
+      .orderBy(col("user_id"), col("version"))
     assert(a.exceptAll(b).count() === 0)
     assert(a.count() === b.count())
   }
+
 }

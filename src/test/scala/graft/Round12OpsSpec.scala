@@ -119,9 +119,10 @@ class Round12OpsSpec extends AnyFunSuite {
       s"scd2_stragglers_${System.nanoTime()}")
     val stream = StreamOps.fileStream(spark, b1.schema, staged,
       maxFilesPerTrigger = Some(1))
-    val versions = StreamOps.scd2Stream(stream, "user_id", "event_type",
-      "band", "ts", "event_id", droppedStragglers = Some(dropped))
-    val got = StreamOps.runToCompletion(versions.toDF(),
+    val versions = StreamOps.scd2Stream(stream, "user_id",
+      Seq("event_type", "band"), "ts", "event_id",
+      droppedStragglers = Some(dropped))
+    val got = StreamOps.runToCompletion(versions,
         s"scd2s_${System.nanoTime()}", outputMode = "append",
         statePartitions = Some(4))
       .orderBy("version").collect()
@@ -143,9 +144,9 @@ class Round12OpsSpec extends AnyFunSuite {
     val staged = stageBatches("scd2_nullattr", Seq(b1, b2))
     val stream = StreamOps.fileStream(spark, b1.schema, staged,
       maxFilesPerTrigger = Some(1))
-    val versions = StreamOps.scd2Stream(stream, "user_id", "event_type",
-      "band", "ts", "event_id")
-    val got = StreamOps.runToCompletion(versions.toDF(),
+    val versions = StreamOps.scd2Stream(stream, "user_id",
+      Seq("event_type", "band"), "ts", "event_id")
+    val got = StreamOps.runToCompletion(versions,
         s"scd2n_${System.nanoTime()}", outputMode = "append",
         statePartitions = Some(4))
       .select("user_id", "event_type", "band", "valid_from_us",
@@ -184,13 +185,13 @@ class Round12OpsSpec extends AnyFunSuite {
     ).toDF("k", "attr", "ts", "tie", "deleted")
     val base = all.filter(col("ts") < lit(ts(9000L)))
     val delta = all.filter(col("ts") >= lit(ts(9000L)))
-    val hist0 = RelOps.scd2BuildWithDeletes(base, "k", Seq("attr"),
-      "ts", "tie", "deleted")
-    val applied = RelOps.scd2ApplyWithDeletes(hist0, delta, "k",
-        Seq("attr"), "ts", "tie", "deleted")
+    val hist0 = RelOps.scd2Build(base, "k", Seq("attr"),
+      "ts", "tie", Some("deleted"))
+    val applied = RelOps.scd2Apply(hist0, delta, "k",
+        Seq("attr"), "ts", "tie", Some("deleted"))
       .orderBy("k", "version")
-    val rebuilt = RelOps.scd2BuildWithDeletes(all, "k", Seq("attr"),
-        "ts", "tie", "deleted")
+    val rebuilt = RelOps.scd2Build(all, "k", Seq("attr"),
+        "ts", "tie", Some("deleted"))
       .orderBy("k", "version")
     assert(applied.collect().toSeq === rebuilt.collect().toSeq)
     // the shapes the seeds must get right, spelled out:
@@ -228,17 +229,17 @@ class Round12OpsSpec extends AnyFunSuite {
     val staged = stageBatches("scd2_del_stream", Seq(b1, b2, b3))
     val stream = StreamOps.fileStream(spark, b1.schema, staged,
       maxFilesPerTrigger = Some(1))
-    val versions = StreamOps.scd2StreamWithDeletes(stream, "user_id",
-      "event_type", "band", "ts", "event_id", "deleted")
-    val got = StreamOps.runToCompletion(versions.toDF(),
+    val versions = StreamOps.scd2Stream(stream, "user_id",
+      Seq("event_type", "band"), "ts", "event_id", Some("deleted"))
+    val got = StreamOps.runToCompletion(versions,
         s"scd2d_${System.nanoTime()}", outputMode = "append",
         statePartitions = Some(4))
       .select("user_id", "event_type", "band", "valid_from_us",
         "valid_to_us", "version")
       .orderBy("version")
-    val want = RelOps.scd2BuildWithDeletes(
+    val want = RelOps.scd2Build(
         b1.unionByName(b2).unionByName(b3), "user_id",
-        Seq("event_type", "band"), "ts", "event_id", "deleted")
+        Seq("event_type", "band"), "ts", "event_id", Some("deleted"))
       .filter(!col("is_current"))
       .select("user_id", "event_type", "band", "valid_from_us",
         "valid_to_us", "version")
@@ -273,9 +274,9 @@ class Round12OpsSpec extends AnyFunSuite {
     val stream = StreamOps.fileStream(spark, b1.schema, staged,
       maxFilesPerTrigger = Some(1))
     val versions = StreamOps.scd2Stream(stream, "user_id",
-      "event_type", "band", "ts", "event_id",
+      Seq("event_type", "band"), "ts", "event_id",
       droppedStragglers = Some(dropped))
-    val got = StreamOps.runToCompletion(versions.toDF(),
+    val got = StreamOps.runToCompletion(versions,
         s"scd2h_${System.nanoTime()}", outputMode = "append",
         statePartitions = Some(4))
       .orderBy("version").collect()
@@ -302,10 +303,10 @@ class Round12OpsSpec extends AnyFunSuite {
       s"del_straggler_${System.nanoTime()}")
     val stream = StreamOps.fileStream(spark, b1.schema, staged,
       maxFilesPerTrigger = Some(1))
-    val versions = StreamOps.scd2StreamWithDeletes(stream, "user_id",
-      "event_type", "band", "ts", "event_id", "deleted",
+    val versions = StreamOps.scd2Stream(stream, "user_id",
+      Seq("event_type", "band"), "ts", "event_id", Some("deleted"),
       droppedStragglers = Some(dropped))
-    val got = StreamOps.runToCompletion(versions.toDF(),
+    val got = StreamOps.runToCompletion(versions,
         s"scd2hd_${System.nanoTime()}", outputMode = "append",
         statePartitions = Some(4))
       .collect()
@@ -523,8 +524,8 @@ class Round12OpsSpec extends AnyFunSuite {
       (2L, "q", ts(1000L), 6L, true),
       (2L, "b", ts(2000L), 7L, false)
     ).toDF("k", "attr", "ts", "tie", "deleted")
-    val got = RelOps.scd2BuildWithDeletes(rows, "k", Seq("attr"),
-        "ts", "tie", "deleted")
+    val got = RelOps.scd2Build(rows, "k", Seq("attr"),
+        "ts", "tie", Some("deleted"))
       .orderBy("k", "version")
       .select("k", "attr", "valid_from_us", "valid_to_us", "version",
         "is_current")
@@ -544,8 +545,8 @@ class Round12OpsSpec extends AnyFunSuite {
     val rows = Seq((1L, "a", ts(1000L), 1L, None: Option[Boolean]),
         (1L, "b", ts(2000L), 2L, None: Option[Boolean]))
       .toDF("k", "attr", "ts", "tie", "deleted")
-    val got = RelOps.scd2BuildWithDeletes(rows, "k", Seq("attr"),
-      "ts", "tie", "deleted")
+    val got = RelOps.scd2Build(rows, "k", Seq("attr"),
+      "ts", "tie", Some("deleted"))
     val plain = RelOps.scd2Build(rows.drop("deleted"), "k",
       Seq("attr"), "ts", "tie")
     assert(got.orderBy("version").collect().toSeq ===

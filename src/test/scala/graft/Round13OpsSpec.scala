@@ -42,9 +42,10 @@ class Round13OpsSpec extends AnyFunSuite {
       s"scd2_tie_stragglers_${System.nanoTime()}")
     val stream = StreamOps.fileStream(spark, b1.schema, staged,
       maxFilesPerTrigger = Some(1))
-    val versions = StreamOps.scd2Stream(stream, "user_id", "event_type",
-      "band", "ts", "event_id", droppedStragglers = Some(dropped))
-    val got = StreamOps.runToCompletion(versions.toDF(),
+    val versions = StreamOps.scd2Stream(stream, "user_id",
+      Seq("event_type", "band"), "ts", "event_id",
+      droppedStragglers = Some(dropped))
+    val got = StreamOps.runToCompletion(versions,
         s"scd2tie_${System.nanoTime()}", outputMode = "append",
         statePartitions = Some(4))
       .orderBy("version").collect()
@@ -67,10 +68,10 @@ class Round13OpsSpec extends AnyFunSuite {
       s"scd2d_tie_stragglers_${System.nanoTime()}")
     val stream = StreamOps.fileStream(spark, b1.schema, staged,
       maxFilesPerTrigger = Some(1))
-    val versions = StreamOps.scd2StreamWithDeletes(stream, "user_id",
-      "event_type", "band", "ts", "event_id", "deleted",
+    val versions = StreamOps.scd2Stream(stream, "user_id",
+      Seq("event_type", "band"), "ts", "event_id", Some("deleted"),
       droppedStragglers = Some(dropped))
-    val got = StreamOps.runToCompletion(versions.toDF(),
+    val got = StreamOps.runToCompletion(versions,
         s"scd2dtie_${System.nanoTime()}", outputMode = "append",
         statePartitions = Some(4))
       .orderBy("version").collect()
@@ -190,8 +191,8 @@ class Round13OpsSpec extends AnyFunSuite {
   }
 
   // ---------------------------------------------------------------- //
-  // scd2StreamMulti: multi-attribute streaming SCD2 (round-13 verdict
-  // task 3 — row-encoded state, arbitrary atomic attr types)
+  // scd2Stream over many attributes: multi-attribute streaming SCD2
+  // (row-encoded state, arbitrary atomic attr types)
   // ---------------------------------------------------------------- //
 
   test("scd2StreamMulti: null attrs version like the batch build " +
@@ -211,7 +212,7 @@ class Round13OpsSpec extends AnyFunSuite {
     val stream = StreamOps.fileStream(spark, b1.schema, staged,
       maxFilesPerTrigger = Some(1))
     val got = StreamOps.runToCompletion(
-        StreamOps.scd2StreamMulti(stream, "user_id",
+        StreamOps.scd2Stream(stream, "user_id",
           Seq("etype", "band", "flag"), "ts", "event_id"),
         s"scd2multi_${System.nanoTime()}", outputMode = "append",
         statePartitions = Some(4))
@@ -228,8 +229,8 @@ class Round13OpsSpec extends AnyFunSuite {
     assert(got.count() === 3L)
   }
 
-  test("scd2StreamMulti ≡ scd2Stream on the two-attr (String, Long) " +
-       "special case (same staged replay, same closed versions)") {
+  test("scd2Stream on the two-attr (String, Long) shape ≡ batch " +
+       "build minus is_current (same staged replay)") {
     val b1 = Seq((1L, "a", Some(10L), ts(100000L), 1L),
         (1L, "b", Some(20L), ts(200000L), 2L),
         (2L, "x", Some(5L), ts(150000L), 3L))
@@ -238,23 +239,21 @@ class Round13OpsSpec extends AnyFunSuite {
         (2L, "y", Some(6L), ts(250000L), 5L))
       .toDF("user_id", "event_type", "band", "ts", "event_id")
     val staged = stageBatches("scd2multi_two", Seq(b1, b2))
-    def mkStream() = StreamOps.fileStream(spark, b1.schema, staged,
+    val stream = StreamOps.fileStream(spark, b1.schema, staged,
       maxFilesPerTrigger = Some(1))
     val multi = StreamOps.runToCompletion(
-        StreamOps.scd2StreamMulti(mkStream(), "user_id",
+        StreamOps.scd2Stream(stream, "user_id",
           Seq("event_type", "band"), "ts", "event_id"),
         s"scd2m2_${System.nanoTime()}", outputMode = "append",
         statePartitions = Some(4))
       .orderBy("user_id", "version").collect()
-    val two = StreamOps.runToCompletion(
-        StreamOps.scd2Stream(mkStream(), "user_id", "event_type",
-          "band", "ts", "event_id").toDF(),
-        s"scd2t2_${System.nanoTime()}", outputMode = "append",
-        statePartitions = Some(4))
+    val batch = RelOps.scd2Build(b1.unionByName(b2), "user_id",
+        Seq("event_type", "band"), "ts", "event_id")
+      .filter(!col("is_current"))
       .select("user_id", "event_type", "band", "valid_from_us",
         "valid_to_us", "version")
       .orderBy("user_id", "version").collect()
-    assert(multi.toSeq === two.toSeq)
+    assert(multi.toSeq === batch.toSeq)
   }
 
   test("scd2StreamMulti: equal-timestamp smaller-tie straggler drops " +
@@ -270,7 +269,7 @@ class Round13OpsSpec extends AnyFunSuite {
     val stream = StreamOps.fileStream(spark, b1.schema, staged,
       maxFilesPerTrigger = Some(1))
     val got = StreamOps.runToCompletion(
-        StreamOps.scd2StreamMulti(stream, "user_id",
+        StreamOps.scd2Stream(stream, "user_id",
           Seq("etype", "band", "flag"), "ts", "event_id",
           droppedStragglers = Some(dropped)),
         s"scd2mtie_${System.nanoTime()}", outputMode = "append",
@@ -280,8 +279,8 @@ class Round13OpsSpec extends AnyFunSuite {
     assert(got.map(_.getString(1)).toSeq === Seq("a"))
   }
 
-  test("scd2StreamMultiWithDeletes ≡ scd2StreamWithDeletes on the " +
-       "two-attr special case (tombstones, counter across gaps)") {
+  test("scd2Stream with tombstones on the two-attr shape ≡ batch " +
+       "tombstone build minus is_current (counter across gaps)") {
     val b1 = Seq((4L, "a", Some(1L), ts(100000L), 1L, false),
         (4L, "x", Some(9L), ts(200000L), 2L, true), // tombstone
         (5L, "p", Some(3L), ts(150000L), 3L, false))
@@ -291,29 +290,65 @@ class Round13OpsSpec extends AnyFunSuite {
         (5L, "x", Some(9L), ts(350000L), 6L, true)) // terminal tomb
       .toDF("user_id", "event_type", "band", "ts", "event_id", "deleted")
     val staged = stageBatches("scd2md_two", Seq(b1, b2))
-    def mkStream() = StreamOps.fileStream(spark, b1.schema, staged,
+    val stream = StreamOps.fileStream(spark, b1.schema, staged,
       maxFilesPerTrigger = Some(1))
     val multi = StreamOps.runToCompletion(
-        StreamOps.scd2StreamMultiWithDeletes(mkStream(), "user_id",
-          Seq("event_type", "band"), "ts", "event_id", "deleted"),
+        StreamOps.scd2Stream(stream, "user_id",
+          Seq("event_type", "band"), "ts", "event_id", Some("deleted")),
         s"scd2md2_${System.nanoTime()}", outputMode = "append",
         statePartitions = Some(4))
       .orderBy("user_id", "version").collect()
-    val two = StreamOps.runToCompletion(
-        StreamOps.scd2StreamWithDeletes(mkStream(), "user_id",
-          "event_type", "band", "ts", "event_id", "deleted").toDF(),
-        s"scd2dt2_${System.nanoTime()}", outputMode = "append",
-        statePartitions = Some(4))
+    val batch = RelOps.scd2Build(b1.unionByName(b2), "user_id",
+        Seq("event_type", "band"), "ts", "event_id", Some("deleted"))
+      .filter(!col("is_current"))
       .select("user_id", "event_type", "band", "valid_from_us",
         "valid_to_us", "version")
       .orderBy("user_id", "version").collect()
-    assert(multi.toSeq === two.toSeq)
+    assert(multi.toSeq === batch.toSeq)
     // key 4: "a" closed by tombstone (v1), "b" closed by "c" (v2 —
     // the counter SURVIVED the delete gap); key 5: "p" closed by its
     // terminal tombstone (v1)
     assert(multi.map(r => (r.getLong(0), r.getString(1),
       r.getLong(r.length - 1))).toSeq ===
       Seq((4L, "a", 1L), (4L, "b", 2L), (5L, "p", 1L)))
+  }
+
+  test("scd2Stream: an all-null deleted column ≡ no deletedCol ≡ " +
+       "batch build minus is_current over a 3-batch replay") {
+    def batch(rows: (Long, Option[String], Option[Long], Long,
+        Long)*): DataFrame = rows.map { case (k, a, b, ms, id) =>
+        (k, a, b, ts(ms), id, None: Option[Boolean]) }
+      .toDF("user_id", "event_type", "band", "ts", "event_id", "deleted")
+    val b1 = batch((1L, Some("a"), Some(1L), 100000L, 1L),
+      (1L, Some("a"), Some(1L), 150000L, 2L), // no-op
+      (2L, Some("x"), None, 120000L, 3L))
+    val b2 = batch((1L, Some("b"), Some(1L), 200000L, 4L),
+      (2L, Some("x"), None, 220000L, 5L), // null==null no-op
+      (2L, Some("x"), Some(7L), 240000L, 6L))
+    val b3 = batch((1L, None, Some(1L), 300000L, 7L),
+      (1L, Some("c"), Some(2L), 400000L, 8L),
+      (2L, Some("y"), Some(7L), 320000L, 9L))
+    val staged = stageBatches("scd2_null_del", Seq(b1, b2, b3))
+    def closed(deletedCol: Option[String]) = StreamOps.runToCompletion(
+        StreamOps.scd2Stream(StreamOps.fileStream(spark, b1.schema,
+            staged, maxFilesPerTrigger = Some(1)), "user_id",
+          Seq("event_type", "band"), "ts", "event_id", deletedCol),
+        s"scd2nd_${System.nanoTime()}", outputMode = "append",
+        statePartitions = Some(4))
+      .orderBy("user_id", "version").collect().toSeq
+    val nullDel = closed(Some("deleted"))
+    val noDel = closed(None)
+    val want = RelOps.scd2Build(b1.unionByName(b2).unionByName(b3),
+        "user_id", Seq("event_type", "band"), "ts", "event_id")
+      .filter(!col("is_current"))
+      .select("user_id", "event_type", "band", "valid_from_us",
+        "valid_to_us", "version")
+      .orderBy("user_id", "version").collect().toSeq
+    assert(nullDel === noDel)
+    assert(noDel === want)
+    // key 1: a, b, null, (c open); key 2: x/null, x/7, (y open)
+    assert(want.map(r => (r.getLong(0), r.getLong(5))) ===
+      Seq((1L, 1L), (1L, 2L), (1L, 3L), (2L, 1L), (2L, 2L)))
   }
 
   test("scd2StreamMultiWithDeletes ≡ batch tombstone build minus " +
@@ -337,14 +372,15 @@ class Round13OpsSpec extends AnyFunSuite {
     val stream = StreamOps.fileStream(spark, b1.schema, staged,
       maxFilesPerTrigger = Some(1))
     val got = StreamOps.runToCompletion(
-        StreamOps.scd2StreamMultiWithDeletes(stream, "user_id",
-          Seq("etype", "band", "flag"), "ts", "event_id", "deleted"),
+        StreamOps.scd2Stream(stream, "user_id",
+          Seq("etype", "band", "flag"), "ts", "event_id",
+          Some("deleted")),
         s"scd2mdn_${System.nanoTime()}", outputMode = "append",
         statePartitions = Some(4))
       .orderBy("version")
-    val want = RelOps.scd2BuildWithDeletes(b1.unionByName(b2),
+    val want = RelOps.scd2Build(b1.unionByName(b2),
         "user_id", Seq("etype", "band", "flag"), "ts", "event_id",
-        "deleted")
+        Some("deleted"))
       .filter(!col("is_current"))
       .select("user_id", "etype", "band", "flag", "valid_from_us",
         "valid_to_us", "version")

@@ -16,7 +16,7 @@ import graft.streaming.StreamOps
   *    end + gap, the key's state is CLEARED on close (no re-emission
   *    when later data arrives), and a session still extendable at the
   *    final watermark is never emitted.
-  *  - STATE TTL ([[graft.streaming.RunningTotalsTtl]]): a key idle
+  *  - STATE TTL ([[graft.streaming.RunningTotals]] with a TTL): a key idle
   *    longer than the TTL reads back as absent (totals restart), while
   *    an unexpired TTL accumulates exactly like TTL-free state. TTL is
   *    processing-time-based, so this is spec territory — wall-clock
